@@ -45,14 +45,6 @@ def bigint_array_lit(vals: Iterable[int]) -> Column:
     return F.expr(f"array({body})")
 
 
-def int_array_lit(vals: Iterable[int]) -> Column:
-    """array<int> literal via the parser."""
-    body = ",".join(str(int(v)) for v in vals)
-    if not body:
-        return F.expr("CAST(array() AS array<int>)")
-    return F.expr(f"CAST(array({body}) AS array<int>)")
-
-
 def double_array_lit(vals: Iterable[float]) -> Column:
     """array<double> literal via the parser; repr() round-trips IEEE
     doubles exactly (inf/nan intentionally unsupported — no call site

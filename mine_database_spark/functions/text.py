@@ -59,11 +59,6 @@ def word_shingle_strings(text: Column, k: int) -> Column:
 STOPWORDS_EN = ["the", "a", "an", "of", "and", "to", "in", "is", "it", "for"]
 
 
-def stopword_hits(toks: Column, stopwords: list[str] | None = None) -> Column:
-    sw = F.array(*[F.lit(w) for w in (stopwords or STOPWORDS_EN)])
-    return F.size(F.array_intersect(toks, sw))
-
-
 # --- scan-only variants (no array materialization) -------------------------
 # Per-doc token statistics as scalar regexp expressions: measured ~5x faster
 # end-to-end than the split()+higher-order-function forms at sf0.1, because

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from mine_database_spark.functions.text import tokens, word_shingles
+from mine_database_spark.operators.pairs import guard_pair_volume, key_pairs, postings
 
 
 def exact_dedup(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -150,21 +151,11 @@ def lsh_band_keys(signatures: DataFrame, rows_per_band: int = 4) -> DataFrame:
 
 
 def lsh_candidate_pairs(band_keys: DataFrame) -> DataFrame:
-    """Distinct (a_id, b_id) pairs sharing at least one band bucket, a < b.
-
-    Shape (r16, the co_occurrence_edges posting-list recipe, guide
-    §2.3/§2.4): ONE collect_set per (band, band_sig) bucket + an in-task
-    ordered-pair explode replaces the band-keyed self-join — one exchange
-    instead of two sides + two sorts, identical pairs by set semantics
-    (each doc appears once per band, so the bucket set IS the old join
-    group). A bucket's C(f, 2) pairs land in one task in both shapes."""
-    post = band_keys.groupBy("band", "band_sig").agg(
-        F.collect_set("doc_id").alias("ds")
-    )
+    """Distinct (a_id, b_id) pairs sharing at least one (band, band_sig)
+    bucket, a_id < b_id: one posting list per bucket (pairs.key_pairs)."""
     return (
-        post.select(F.explode("ds").alias("a_id"), "ds")
-        .select("a_id", F.explode("ds").alias("b_id"))
-        .where(F.col("a_id") < F.col("b_id"))
+        key_pairs(postings(band_keys, ["band", "band_sig"], "doc_id"))
+        .select("a_id", "b_id")
         .distinct()
     )
 
@@ -259,14 +250,8 @@ def minhash_jaccard_estimate(
 
 
 NGRAM_JACCARD_MAX_CANDIDATES = 2_000_000_000
-"""Default pre-flight ceiling on the uncapped pair-join candidate volume
-Σ df·(df−1)/2 — the EXACT number of shingle-sharing pairs the self-join
-generates. Calibration (measured r15, k=2 bigrams on the bench corpus):
-sf0.1 sits at 3.65e7 (runs in seconds), the 10x replicated corpus at
-3.66e9 (the configuration the r14 scale curve KILLED at >20 min; volume
-grows ~factor² on a dup-heavy corpus, as replicated df multiplies) —
-2e9 passes every legitimate interactive scale and trips before the
-measured-quadratic regime."""
+"""Default ceiling of ngram_jaccard_pairs' pre-flight guard on the
+uncapped pair volume Σ df·(df−1)/2 (calibration in docs/SHUFFLES.md)."""
 
 
 def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
@@ -275,122 +260,58 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id", text_col: str =
                         df_cap: int | None = None,
                         storage_level: StorageLevel | None = None,
                         max_candidate_pairs: int | None = NGRAM_JACCARD_MAX_CANDIDATES) -> DataFrame:
-    """Pairs with shingle-set Jaccard >= threshold.
+    """Pairs with shingle-set Jaccard >= threshold. Returns (a_id, b_id,
+    jaccard), a_id < b_id, jaccard rounded to 6 digits.
 
-    Pair generation goes through the shared-shingle inverted index (an
-    equi-join on the shingle), never a cross join. Two scale guards:
+    Pairs come from one posting list per shingle (pairs.postings /
+    key_pairs), never a cross join. Document ids must be orderable; NULL
+    ids produce no pairs. Three scale controls:
 
-    * `candidates` (e.g. LSH pairs) restricts the shingle table to candidate
-      documents BEFORE the self-join — the posting lists entering the pair
-      join only contain candidate docs — and the generated pairs are then
-      semi-joined to the exact candidate pair set. Restricting after the
-      join (the old form) still paid the full quadratic hot-shingle fanout.
-    * `df_cap` drops shingles whose document frequency exceeds the cap (stop
-      shingles like "the quick" at k=2 make the self-join quadratic in the
-      posting-list length). Jaccard is then computed consistently over the
-      capped shingle universe: sizes and intersections both exclude capped
-      shingles, so the result is exact for the reduced universe — the
-      standard production near-dup approximation.
+    * `candidates` (a_id, b_id) — e.g. LSH pairs — restricts the shingle
+      table to candidate documents BEFORE the posting lists are built, and
+      the result to the exact candidate pair set.
+    * `df_cap` drops shingles held by more than `df_cap` documents before
+      their posting list is built. Jaccard is then exact over the capped
+      shingle universe: sizes and intersections both exclude capped
+      shingles.
+    * With neither, a pre-flight guard (pairs.guard_pair_volume, an eager
+      action at plan build) raises ValueError when the pair volume
+      Σ df·(df−1)/2 exceeds `max_candidate_pairs`; None skips it.
 
-    Shape (r16, guide §2.3/§2.4 — the co_occurrence_edges recipe): the
-    pair join is generated from POSTING LISTS — ONE collect_set aggregate
-    per shingle, pairs exploded in-task from each list — replacing the
-    r01-r15 shingle-table self-join. The old shape paid an exchange for
-    the (doc_id, shingle) distinct, another (plus two sorts) for the
-    shingle-keyed self-join, and stored every hot shingle's string df
-    times in the persisted cache; here collect_set dedups (doc_id,
-    shingle) for free (shingle_table is built distinct=False, removing
-    that whole exchange), the pair volume Σ df·(df−1)/2 is emitted by an
-    in-task double explode with a_id < b_id, and every derived branch
-    (sizes, guard volume, pair explode) reads the SAME posting table,
-    whose cache stores each shingle string ONCE. Values are identical by
-    construction (set semantics; pinned vs the self-join form in pytest
-    and by the DuckDB oracle, which keeps the join formulation). A hot
-    shingle's C(df, 2) pairs land in one task in BOTH shapes (an
-    equi-join keys one bucket to one partition), so the skew profile is
-    unchanged — df_cap remains the production control.
-
-    The posting table feeds three plan branches (sizes + guard + pair
-    explode); `storage_level` (e.g. StorageLevel.MEMORY_AND_DISK)
-    persists it across them at interactive scale. The default None does
-    NOT persist: the table is O(corpus tokens) posting entries, and
-    pinning it at 100 TB is an eviction/OOM hazard — recomputing the scan
-    is the safe default there.
-
-    Pre-flight guard (r14 verdict #4): when NEITHER guard is active
-    (candidates is None and df_cap is None), the pair join's cost is
-    exactly Σ df·(df−1)/2 over the posting lists — quadratic in the
-    hottest shingle's document frequency, and measured-killed (>20 min)
-    on the 10x dup-heavy corpus. Before building that join, this function
-    runs ONE tiny aggregation computing the exact volume and raises
-    ValueError above `max_candidate_pairs`, steering to df_cap /
-    candidates / the capped registry twin. The check is an EAGER Spark
-    action at plan-build time — the deliberate price of making the
-    quadratic configuration opt-in (pass max_candidate_pairs=None to run
-    uncapped regardless); guarded configs skip it entirely. It runs
-    AFTER the persist, so a persisted shingle table is materialized by
-    the check and the main query reuses the cache rather than paying a
-    second scan.
-
-    Returns (a_id, b_id, jaccard) with jaccard rounded to 6 digits.
+    `storage_level` persists the posting table across its branches (sizes,
+    guard, pair explode); None (default) recomputes it, the safe choice
+    when the table is too big to pin.
     """
-    sh = shingle_table(docs, id_col, text_col, k, distinct=False)
+    # the cap counts rows per shingle, so it needs distinct (doc, shingle)
+    sh = shingle_table(docs, id_col, text_col, k, distinct=df_cap is not None)
     if candidates is not None:
         cand_docs = (
             candidates.select(F.col("a_id").alias("doc_id"))
             .unionByName(candidates.select(F.col("b_id").alias("doc_id")))
             .distinct()
         )
-        # no broadcast hint: the candidate doc set is usually small enough
-        # that AQE broadcasts it, but can be huge at 100 TB — let the
-        # runtime stats decide
+        # no broadcast hint: the candidate doc set can be huge at scale —
+        # let AQE's runtime stats decide
         sh = sh.join(cand_docs, "doc_id", "left_semi")
-    # posting lists: collect_set dedups (doc_id, shingle) in the same
-    # exchange that groups by shingle — the previous separate distinct
-    # pass is gone (see shape note in the docstring)
-    post = sh.groupBy("shingle").agg(F.collect_set("doc_id").alias("ds"))
-    if df_cap is not None:
-        # df == size(ds): the cap is a per-row filter on the posting
-        # table, not the previous df-aggregate + anti-join pair
-        post = post.where(F.size("ds") <= df_cap)
+    post = postings(sh, ["shingle"], "doc_id", cap=df_cap)
     if storage_level is not None:
-        # measured at sf0.1 (k=2, no df_cap, r16 back-to-back stash A/B):
-        # the posting-table persist keeps the self-join-era win (the r15
-        # form measured persist 4s vs 14s without) while storing each
-        # shingle string ONCE instead of df times — the r15 raw-table
-        # persist was the registry's noisiest cache (pass spread
-        # 10.8-33.3s under pass-boundary clearCache). (localCheckpoint was
-        # tried on the r15 shape and is NOT equivalent: the RDD boundary
-        # blinds AQE and cost 12-16s.) The table stays pinned until the
-        # SparkContext cleans it — callers looping over many corpora
-        # should unpersist or pass None.
         post = post.persist(storage_level)
-    if candidates is None and df_cap is None and max_candidate_pairs is not None:
-        # exact pair-join volume from the posting lists (see docstring);
-        # size() is cast up front — df*(df-1) on a hot shingle overflows
-        # int32 past ~46k docs
-        row = post.agg(
-            F.expr("sum(cast(size(ds) as bigint) * (size(ds) - 1) div 2)").alias("v")
-        ).first()
-        vol = row["v"] or 0
-        if vol > max_candidate_pairs:
-            raise ValueError(
-                f"uncapped ngram_jaccard would generate {vol} shingle-sharing "
-                f"candidate pairs (> max_candidate_pairs={max_candidate_pairs}); "
-                "this configuration is quadratic in hot-shingle document "
-                "frequency. Pass df_cap (the ngram_jaccard_capped twin uses "
-                "df_cap=50), restrict with candidates=<LSH pairs>, or set "
-                "max_candidate_pairs=None to force the uncapped run."
-            )
+    if candidates is None and df_cap is None:
+        guard_pair_volume(
+            post,
+            max_candidate_pairs,
+            "uncapped ngram_jaccard is quadratic in hot-shingle document "
+            "frequency. Pass df_cap (the ngram_jaccard_capped twin uses "
+            "df_cap=50), restrict with candidates=<LSH pairs>, or set "
+            "max_candidate_pairs=None to force the uncapped run.",
+        )
     sizes = (
-        post.select(F.explode("ds").alias("doc_id"))
+        post.select(F.explode("ids").alias("doc_id"))
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n"))
     )
     inter = (
-        post.select(F.explode("ds").alias("a_id"), "ds")
-        .select("a_id", F.explode("ds").alias("b_id"))
-        .where(F.col("a_id") < F.col("b_id"))
+        key_pairs(post)
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).alias("inter"))
     )
@@ -895,34 +816,26 @@ def winnow_candidate_pairs(
     ngram_jaccard_pairs(candidates=...) or a span diff for the verify
     pass, exactly like the MinHash route.
 
-    Returns (a_id, b_id, n_shared) with a_id < b_id.
+    Returns (a_id, b_id, n_shared) with a_id < b_id; ids must be
+    orderable and NULL ids produce no pairs.
 
-    `df_cap` drops fingerprints appearing in more than that many
-    documents before pairing — simultaneously the MOSS "ignore
-    boilerplate/legitimately-shared code" move and the skew guard: a
-    fingerprint shared by f documents emits f·(f-1)/2 pairs, so an
-    uncapped ubiquitous fingerprint (a license header) is quadratic.
-    Production at 100 TB should always set it; None (default) keeps the
-    exact semantics for oracle checking.
+    `df_cap` drops fingerprints held by more than that many documents
+    before their posting list is built — the MOSS "ignore boilerplate"
+    move and the skew guard at once: a fingerprint shared by f documents
+    emits f·(f-1)/2 pairs. Production at scale should always set it; None
+    (default) keeps the exact semantics for oracle checking.
 
     Scale: fingerprints are the shuffle-free scan form
-    (winnow_fingerprints); the pair generation is an inverted-index
-    equi-join on the fingerprint value — the ngram_jaccard shape, never
-    an all-pairs cross join — and the pair aggregate is map-side
-    combinable. With df_cap set, the join fan-out per fingerprint is
-    bounded by the cap.
+    (winnow_fingerprints); pairs come from one posting list per
+    fingerprint (pairs.key_pairs) and the pair count is map-side
+    combinable.
 
-    The fingerprint table feeds three plan branches (the df-cap aggregate
-    + both self-join sides), each otherwise re-running the per-position
-    md5 scan; `storage_level` persists it across them — the
-    ngram_jaccard_pairs convention, same tradeoff: default None stays
-    safe at 100 TB (the table is O(corpus positions); recomputing the
-    scan beats pinning it), persist at interactive scale. When a
-    storage_level is given, the persisted fingerprint table is exposed on
-    the result as `pairs.persisted_fingerprints` so the caller can
-    `.unpersist()` it once the pairs are materialized — without this the
-    pin lives for the SparkContext lifetime (Spark's cacheManager serves
-    it to any plan-identical scan, so even a fresh invocation reads it).
+    With df_cap the fingerprint table feeds two branches (the per-key
+    count and the posting lists), each otherwise re-running the md5 scan;
+    `storage_level` persists it across them. None (default) recomputes —
+    safe when the table is too big to pin. The persisted table is exposed
+    as `pairs.persisted_fingerprints` so the caller can `.unpersist()` it
+    once the pairs are materialized.
     """
     if min_shared < 1:
         raise ValueError(f"min_shared must be >= 1, got {min_shared}")
@@ -931,21 +844,9 @@ def winnow_candidate_pairs(
     fp = winnow_fingerprints(docs, id_col=id_col, text_col=text_col, k=k, w=w)
     if storage_level is not None:
         fp = fp.persist(storage_level)
-    if df_cap is not None:
-        keep = (
-            fp.groupBy("fingerprint")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .where(F.col("__df") <= df_cap)
-            .select("fingerprint")
-        )
-        fp = fp.join(keep, "fingerprint")
     pairs = (
-        fp.alias("a")
-        .join(fp.alias("b"), "fingerprint")
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .groupBy(
-            F.col("a.doc_id").alias("a_id"), F.col("b.doc_id").alias("b_id")
-        )
+        key_pairs(postings(fp, ["fingerprint"], "doc_id", cap=df_cap))
+        .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_shared"))
         .where(F.col("n_shared") >= min_shared)
     )
@@ -968,14 +869,13 @@ def source_overlap(
     down-weighted) BEFORE paying for document-pair dedup between them.
 
     Returns (source_a, source_b, n_common, n_a, n_b, jaccard) with
-    source_a < source_b, only for pairs sharing at least one shingle.
+    source_a < source_b, only for pairs sharing at least one shingle;
+    NULL sources pair with nothing.
 
-    Scale — why this is cheap where document-pair Jaccard is not: the
-    inverted index is distinct (source, shingle), so each shingle's posting
-    list is bounded by the NUMBER OF SOURCES (tens), not the number of
-    documents containing it — the self-join fan-out per shingle is at most
-    #sources², no df_cap needed. One distinct + one shingle-keyed equi-join
-    + two map-side-combinable aggregates over O(#sources²) rows; union
+    Scale — why this is cheap where document-pair Jaccard is not: each
+    shingle's posting list (pairs.postings) holds SOURCES, so it is bounded
+    by the number of sources (tens), not the number of documents — the
+    pair fan-out per shingle is at most #sources², no cap needed. Union
     sizes come from |A|+|B|−|A∩B|, never a union materialization.
     """
     from mine_database_spark.functions.text import word_shingle_strings
@@ -986,12 +886,8 @@ def source_overlap(
     ).distinct()
     sizes = sh.groupBy("source").agg(F.count(F.lit(1)).alias("n"))
     inter = (
-        sh.alias("a")
-        .join(sh.alias("b"), "shingle")
-        .where(F.col("a.source") < F.col("b.source"))
-        .groupBy(
-            F.col("a.source").alias("source_a"), F.col("b.source").alias("source_b")
-        )
+        key_pairs(postings(sh, ["shingle"], "source"))
+        .groupBy(F.col("a_id").alias("source_a"), F.col("b_id").alias("source_b"))
         .agg(F.count(F.lit(1)).alias("n_common"))
     )
     return (
@@ -1386,31 +1282,26 @@ def ngram_containment_pairs(
     `threshold`; direction recovers from the sizes (the contained side is
     the smaller set).
 
-    Scale: identical plan family to ngram_jaccard_pairs — distinct
-    shingle inverted index, shingle-keyed equi-join (never all-pairs),
-    map-side-combinable intersection counts; `df_cap` drops
-    boilerplate shingles (> cap docs) exactly like the jaccard/winnow
-    skew guard. Reference: the reference's dedup is whole-InChIKey
-    equality (minedatabase/pickaxe.py:399-404); containment extends it
-    for the training-data pipeline like ngram_jaccard does.
+    Scale: the ngram_jaccard_pairs plan family — one posting list per
+    distinct shingle (pairs.postings / key_pairs), map-side-combinable
+    intersection counts; `df_cap` drops boilerplate shingles (> cap docs)
+    before their posting list is built, and sizes count only the shingles
+    that survive it. Ids must be orderable; NULL ids produce no pairs.
+    Reference: the reference's dedup is whole-InChIKey equality
+    (minedatabase/pickaxe.py:399-404); containment extends it for the
+    training-data pipeline like ngram_jaccard does.
     """
     if not 0.0 < threshold <= 1.0:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
     sh = shingle_table(docs, id_col, text_col, k=k, distinct=True)
-    if df_cap is not None:
-        hot = (
-            sh.groupBy("shingle")
-            .agg(F.count(F.lit(1)).alias("df"))
-            .where(F.col("df") > df_cap)
-            .select("shingle")
-        )
-        sh = sh.join(hot, "shingle", "left_anti")
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.select(F.col("doc_id").alias("a_id"), "shingle")
-    b = sh.select(F.col("doc_id").alias("b_id"), "shingle")
+    post = postings(sh, ["shingle"], "doc_id", cap=df_cap)
+    sizes = (
+        post.select(F.explode("ids").alias("doc_id"))
+        .groupBy("doc_id")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
     inter = (
-        a.join(b, "shingle")
-        .where(F.col("a_id") < F.col("b_id"))
+        key_pairs(post)
         .groupBy("a_id", "b_id")
         .agg(F.count(F.lit(1)).cast("bigint").alias("inter"))
     )
@@ -1445,19 +1336,23 @@ def simhash_hamming_pairs(
     Returns (a_id, b_id, hamming) with a_id < b_id.
 
     Scale: simhash60 is one map-side-combinable aggregate (O(docs)
-    shuffle); banding multiplies rows 4×; candidates come from 4 band
-    equi-joins (never all-pairs) and the verify is a row-local xor —
-    the WWW'07 production shape for multi-billion-page dedup. `band_cap`
+    shuffle); banding multiplies rows 4×; candidates come from one posting
+    list per (band, band_val) (pairs.key_pairs, never all-pairs) and the
+    verify is a row-local xor — the WWW'07 production shape. `band_cap`
     drops degenerate bands (> cap docs sharing one band value — e.g. the
-    all-zero band of near-empty docs) whose self-join fan-out is
-    quadratic, same knob as the LSH/winnow/jaccard skew guards.
+    all-zero band of near-empty docs) before their posting list is built.
+    Ids must be orderable; NULL ids produce no pairs.
     """
     if not 0 <= max_hamming <= 3:
         raise ValueError(f"max_hamming must be in [0, 3] (4-band pigeonhole), got {max_hamming}")
-    sig = simhash60(docs, id_col=id_col, text_col=text_col)
+    if band_cap is not None and band_cap < 2:
+        raise ValueError(f"band_cap must be >= 2 (or None), got {band_cap}")
+    sig = simhash60(docs, id_col=id_col, text_col=text_col).where(
+        F.col("doc_id").isNotNull()
+    )
     bands = sig.select(
-        "doc_id",
-        "simhash",
+        # struct ids order by doc_id first, so a_id < b_id is doc order
+        F.struct("doc_id", "simhash").alias("sid"),
         F.posexplode(
             F.array(*[
                 F.shiftright(F.col("simhash"), 15 * b).bitwiseAND(F.lit(0x7FFF))
@@ -1465,28 +1360,12 @@ def simhash_hamming_pairs(
             ])
         ).alias("band", "band_val"),
     )
-    if band_cap is not None:
-        if band_cap < 2:
-            raise ValueError(f"band_cap must be >= 2 (or None), got {band_cap}")
-        keep = (
-            bands.groupBy("band", "band_val")
-            .agg(F.count(F.lit(1)).alias("__bf"))
-            .where(F.col("__bf") <= band_cap)
-            .select("band", "band_val")
-        )
-        bands = bands.join(keep, ["band", "band_val"])
-    cand = (
-        bands.alias("x")
-        .join(bands.alias("y"), ["band", "band_val"])
-        .where(F.col("x.doc_id") < F.col("y.doc_id"))
-        .select(
-            F.col("x.doc_id").alias("a_id"),
-            F.col("y.doc_id").alias("b_id"),
-            F.col("x.simhash").alias("sa"),
-            F.col("y.simhash").alias("sb"),
-        )
-        .distinct()
-    )
+    cand = key_pairs(postings(bands, ["band", "band_val"], "sid", cap=band_cap)).select(
+        F.col("a_id.doc_id").alias("a_id"),
+        F.col("b_id.doc_id").alias("b_id"),
+        F.col("a_id.simhash").alias("sa"),
+        F.col("b_id.simhash").alias("sb"),
+    ).distinct()
     return (
         cand.withColumn(
             "hamming", F.bit_count(F.col("sa").bitwiseXOR(F.col("sb"))).cast("int")

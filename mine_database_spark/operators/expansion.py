@@ -610,28 +610,3 @@ def rewrite_cofactor_reactions(reactions: DataFrame, cofactor_ids: list[str]):
         )
     )
 
-
-def remove_cofactor_redundancy(compounds: DataFrame, reactions: DataFrame,
-                               cofactor_ids: list[str] | None = None):
-    """T8 (pickaxe.py:793-940), whole-network form: cofactor rewrite over all
-    reactions plus orphan GC over all compounds. The generation loop uses the
-    incremental form (rewrite_cofactor_reactions on the new reactions only —
-    the rewrite is idempotent); this entry point serves one-shot cleanup of
-    an assembled network.
-
-    cofactor_ids: coreactant ids ('X…'); collected from `compounds` (tiny
-    dimension) when not supplied.
-    """
-    if cofactor_ids is None:
-        cofactor_ids = [
-            r["_id"] for r in compounds.where(F.col("type") == "Coreactant").select("_id").collect()
-        ]
-    reactions_out = rewrite_cofactor_reactions(reactions, cofactor_ids)
-
-    # orphan GC: fully-disconnected predicted compounds (reference
-    # pickaxe.py:928-940 — no Reactant_in AND no Product_of, not Starting)
-    refs = edge_table(reactions_out).select("c_id").distinct()
-    compounds_out = compounds.join(refs, compounds["_id"] == refs["c_id"], "left").where(
-        (F.col("type") != "Predicted") | F.col("c_id").isNotNull()
-    ).drop("c_id")
-    return compounds_out, reactions_out

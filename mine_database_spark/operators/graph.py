@@ -17,45 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-
-def bfs_reach(
-    edges: DataFrame,
-    seeds: DataFrame,
-    max_iter: int = 10,
-    id_col: str = "id",
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """All nodes reachable from `seeds` within `max_iter` hops.
-
-    edges: (src, dst); seeds: single-column DF of node ids.
-    Returns (id, hops) with the minimum hop count.
-    Terminates early at fixpoint (empty frontier).
-    """
-    visited = seeds.select(F.col(seeds.columns[0]).alias(id_col)).distinct().withColumn("hops", F.lit(0))
-    frontier = visited.select(id_col)
-    for it in range(1, max_iter + 1):
-        nxt = (
-            edges.join(F.broadcast(frontier).withColumnRenamed(id_col, "src"), "src")
-            .select(F.col("dst").alias(id_col))
-            .distinct()
-            .join(visited.select(id_col), id_col, "left_anti")
-        )
-        # eager localCheckpoint instead of cache(): the isEmpty action below
-        # materializes every round anyway; the checkpoint truncates lineage
-        # and its RDD is GC-cleaned with the DataFrame, while cache() entries
-        # pin the session CacheManager until an explicit unpersist and leak
-        # across calls (checkpoint_every kept for API compatibility)
-        nxt = nxt.localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt.withColumn("hops", F.lit(it)))
-        frontier = nxt.select(id_col)
-    return visited
-
-
-def prune_to_reachable(nodes: DataFrame, reachable: DataFrame, id_col: str) -> DataFrame:
-    """Whitelist semi-restriction (reference prune_network, pickaxe.py:957-962)."""
-    return nodes.join(reachable.select(F.col(reachable.columns[0]).alias(id_col)), id_col, "left_semi")
+from mine_database_spark.operators.pairs import key_pairs, postings
 
 
 def bfs_reach_bipartite(
@@ -238,50 +200,17 @@ def enumerate_paths(
 def co_occurrence_edges(df: DataFrame, group_col: str, item_col: str) -> DataFrame:
     """Undirected co-occurrence edges: items sharing a group value.
 
-    Used to build the co-purchase graph from lineitem (group=order, item=part).
-    Both directions of every pair are returned (the symmetric closure), no
-    self-loops, deduplicated — exactly the r01-r15 self-join form's output.
+    Used to build the co-purchase graph from lineitem (group=order,
+    item=part). Returns (src, dst): both directions of every pair (the
+    symmetric closure), no self-loops, deduplicated. NULL groups and NULL
+    items produce no edges; items must be orderable (pairs.postings).
 
-    Shape (r16, guide §2.3/§2.4): ONE collect_set aggregate per group plus a
-    pair explode, replacing the previous distinct → self-join-on-group →
-    distinct chain. The old shape paid an exchange for the (g, item)
-    distinct, two more (exchange-reused) for the group-keyed equi-join plus
-    its sort, and a final exchange for the output distinct — and the join
-    materialized every ordered pair BOTH ways before the distinct. Here the
-    per-group item set is built in one exchange (partial_collect_set
-    aggregates map-side; collect_set dedups (g, item) for free, so the
-    separate distinct pass disappears), ordered pairs explode in-task with
-    `src < dst` HALVING the rows entering the output distinct, and the
-    symmetric closure is emitted by a 2-element explode AFTER the dedup —
-    no join anywhere. Measured at sf0.1 (r16 A/B, min-of-3 isolated noop
-    passes, rows identical): the derivation drove pagerank 9.76 → and
-    degree_distribution 3.06 → (see OPTIMIZATION_r16.md for the committed
-    numbers); plan: the derivation's SortMergeJoins are gone.
-
-    Skew note: one output row per group with an items array bounded by the
-    group's distinct-item count — the explode volume is Σ n_g², the same
-    pair volume the join produced. A giant group (hot key) concentrates its
-    n² pairs in one task either way (an equi-join keys the same bucket to
-    one partition); cap or split hot groups upstream in both shapes.
-
-    NULL semantics, pinned by pytest: NULL groups produce no edges (SQL
-    equality never matched them in the join form; groupBy would keep them,
-    so they are filtered explicitly) and NULL items produce no edges
-    (collect_set drops NULLs; the old form's src != dst predicate rejected
-    them).
+    Scale: one posting list per group (pairs.key_pairs); the explode volume
+    is Σ n_g² over groups and a giant group's pairs land in one task.
     """
-    grp = (
-        df.select(F.col(group_col).alias("g"), F.col(item_col).alias("it"))
-        .where(F.col("g").isNotNull())
-        .groupBy("g")
-        .agg(F.collect_set("it").alias("its"))
-    )
-    und = (
-        grp.select(F.explode("its").alias("src"), "its")
-        .select("src", F.explode("its").alias("dst"))
-        .where(F.col("src") < F.col("dst"))
-        .distinct()
-    )
+    und = key_pairs(postings(df, [group_col], item_col)).select(
+        F.col("a_id").alias("src"), F.col("b_id").alias("dst")
+    ).distinct()
     return und.select(
         F.explode(
             F.array(
@@ -653,22 +582,16 @@ def adamic_adar(
     pairs that are already edges — the link-PREDICTION form; False keeps
     them (the neighborhood-overlap audit form).
 
-    Scale: common-neighbor enumeration is the triangle wedge join —
-    O(Σ C(deg(w), 2)) pairs fan out from each center w. `max_degree`
-    caps it by EXCLUDING hub centers, which is principled here, not an
-    approximation dodge: a hub's weight 1/ln(deg) is the smallest in the
-    graph and its C(deg,2) wedges the most expensive — the standard
-    production trade. The final top-k is a sort-limit (TakeOrdered).
+    Scale: common-neighbor enumeration is one posting list per center w
+    (pairs.key_pairs), O(Σ C(deg(w), 2)) pairs. `max_degree` EXCLUDES hub
+    centers before their neighbor set is built (pairs.postings cap) —
+    principled, not an approximation dodge: a hub's weight 1/ln(deg) is
+    the smallest in the graph and its C(deg, 2) wedges the most expensive.
+    The final top-k is a sort-limit (TakeOrdered).
 
-    `storage_level` lazily persists the canonical edge set (feeds the
-    degree build AND the exclude-existing anti-join) and the weighted
-    adjacency (feeds both wedge-join sides). MEASURED at sf0.1 (r15 A/B,
-    min-of-3 isolated noop passes): the persist LOSES — 3.49 s recompute
-    vs 4.09 s MEMORY_AND_DISK — AQE's runtime ReusedExchange already
-    dedupes the repeated edge-derivation subtrees (the pagerank_fixed
-    finding; contrast semantic_dedup/binary_neardup, whose re-run work
-    sits below the first exchange and does benefit). The registered
-    query passes None; the option remains for un-reusable inputs.
+    `storage_level` lazily persists the canonical edge set and the
+    weighted adjacency; the registered query passes None (measurements in
+    docs/SHUFFLES.md).
     """
     if top_k < 1:
         raise ValueError(f"top_k must be >= 1, got {top_k}")
@@ -678,30 +601,18 @@ def adamic_adar(
     both = canon.select("a", "b").unionAll(
         canon.select(F.col("b").alias("a"), F.col("a").alias("b"))
     )
-    # r16 (the co_occurrence_edges posting-list recipe, guide §2.3/§2.4):
-    # ONE collect_set per center replaces the degree aggregate + the
-    # adjacency join + the center-keyed wedge self-join — `both` carries
-    # distinct rows (canon is distinct), so size(ns) IS the old degree
-    # count and the in-task (u < v) pair explode emits exactly the old
-    # join's wedge set, with each center's weight attached for free.
-    nbrs = both.groupBy(F.col("a").alias("center")).agg(
-        F.collect_set("b").alias("ns")
-    )
-    degree = F.size("ns").cast("bigint")
-    centers = nbrs.where(degree >= 2)
-    if max_degree is not None:
-        centers = centers.where(degree <= max_degree)
+    # `both` is distinct, so each center's posting size is its degree
+    nbrs = postings(both, ["a"], "b", cap=max_degree)
+    degree = F.size("ids").cast("bigint")
     w_ppm = F.floor(
         F.lit(1_000_000.0) / F.log(degree.cast("double"))
     ).cast("bigint")
-    adj = centers.select(w_ppm.alias("w_ppm"), "ns")
+    adj = nbrs.where(degree >= 2).select(w_ppm.alias("w_ppm"), "ids")
     if storage_level is not None:
         adj = adj.persist(storage_level)
     scored = (
-        adj.select("w_ppm", F.explode("ns").alias("u"), "ns")
-        .select("w_ppm", "u", F.explode("ns").alias("v"))
-        .where(F.col("u") < F.col("v"))
-        .groupBy("u", "v")
+        key_pairs(adj)
+        .groupBy(F.col("a_id").alias("u"), F.col("b_id").alias("v"))
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("common_neighbors"),
             F.sum("w_ppm").alias("aa_ppm"),

@@ -88,12 +88,6 @@ def extract_media_features(media: DataFrame, id_col: str = "media_id", blob_col:
     return media.select(F.col(id_col), F.col(blob_col)).mapInPandas(features, FEATURE_SCHEMA)
 
 
-def resize_stub(media: DataFrame, target_w: int, target_h: int) -> DataFrame:
-    """Resize plumbing: computes output metadata natively; the pixel
-    transform itself would run in the decode UDF (stubbed)."""
-    return media.withColumn("target_w", F.lit(target_w)).withColumn("target_h", F.lit(target_h))
-
-
 def frame_sample_stub(media: DataFrame, every_n: int = 30) -> DataFrame:
     """Video frame-sampling plumbing: emits (media_id, frame_no) rows for a
     deterministic fake frame count (blob_bytes // 1024 frames)."""

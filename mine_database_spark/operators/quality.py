@@ -33,6 +33,7 @@ from mine_database_spark.functions.text import (
     token_count,
     tokens,
 )
+from mine_database_spark.operators.pairs import key_pairs, postings
 
 # (name, weight) — trained offline on a synthetic clean-vs-spam sample with
 # fit(); order is load-bearing: z accumulates left-to-right in this order in
@@ -533,10 +534,10 @@ def token_pmi(
     Returns (tok_a, tok_b, n_pair, pmi, rank), top_k by (pmi desc, toks).
 
     Scale: one (doc, tok) distinct scan; the vocabulary is a top-N
-    sort-limit broadcast BACK into the scan (semi-join), so the pair
-    self-join fans at most vocab_n tokens per document — O(docs·vocab_n²)
-    worst case, governed by vocab_n, never by corpus vocabulary. The
-    final top-k is a sort-limit.
+    sort-limit broadcast BACK into the scan (semi-join), so each
+    document's posting list (pairs.key_pairs) holds at most vocab_n
+    tokens — O(docs·vocab_n²) worst case, governed by vocab_n, never by
+    corpus vocabulary. The final top-k is a sort-limit.
     """
     if vocab_n < 2:
         raise ValueError(f"vocab_n must be >= 2, got {vocab_n}")
@@ -550,10 +551,8 @@ def token_pmi(
         F.count(F.lit(1)).cast("bigint").alias("n_docs")
     )
     pairs = (
-        dtv.alias("x")
-        .join(dtv.alias("y"), "doc_id")
-        .where(F.col("x.tok") < F.col("y.tok"))
-        .groupBy(F.col("x.tok").alias("tok_a"), F.col("y.tok").alias("tok_b"))
+        key_pairs(postings(dtv, ["doc_id"], "tok"))
+        .groupBy(F.col("a_id").alias("tok_a"), F.col("b_id").alias("tok_b"))
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_pair"))
         .where(F.col("n_pair") >= min_pair)
     )

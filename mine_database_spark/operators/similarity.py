@@ -13,12 +13,15 @@ replaces Tanimoto, and the same broadcast-the-small-side shape applies.
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mine_database_spark.functions.lits import double_array_lit
 
 from mine_database_spark.functions.vectors import cosine, cosine_maybe_unrolled
+from mine_database_spark.operators.pairs import guard_pair_volume, key_pairs, postings
 
 
 def _valid_vec(vec_col: str):
@@ -401,42 +404,34 @@ def lsh_bucketed_topk(
 
 
 LSH_MAX_CANDIDATE_PAIRS = 2_000_000_000
-"""Default pre-flight ceiling on band self-join candidate volume
-Σ f·(f−1)/2 over (band, band_sig) bucket sizes f — the EXACT row count
-the pair join produces before the distinct. Calibration (measured r15):
-the bench embeddings' near-uniform geometry admits ~65% of all pairs at
-the registered 8x3 band config, so the 10x replicated corpus reached
-~1e11 candidates and KILLED the 24g driver JVM (heap, no timeout could
-save it) where sf0.1 runs in seconds at ~1.2e7 — 2e9 (the
-ngram_jaccard_pairs ceiling) trips well before the lethal regime."""
+"""Default ceiling of the sign-LSH pre-flight guard on the band pair
+volume Σ f·(f−1)/2 over bucket sizes f (calibration in docs/SHUFFLES.md)."""
 
 
-def _band_volume_guard(
-    posts: DataFrame, max_candidate_pairs: int | None, what: str
-) -> None:
-    """Raise when the band pair explode would exceed `max_candidate_pairs`
-    candidates — ONE tiny aggregation over the bucket POSTING table
-    ((band, band_sig, ds) — bucket sizes are size(ds), so no regrouping
-    pass), an EAGER action at plan-build time; the deliberate price of
-    making the measured-JVM-OOM configuration opt-in (r15: see
-    LSH_MAX_CANDIDATE_PAIRS). None skips the check entirely."""
-    if max_candidate_pairs is None:
-        return
-    row = posts.agg(
-        F.expr("sum(cast(size(ds) as bigint) * (size(ds) - 1) div 2)").alias("v")
-    ).first()
-    vol = row["v"] or 0
-    if vol > max_candidate_pairs:
-        raise ValueError(
-            f"{what} would generate {vol} band-bucket candidate pairs "
-            f"(> max_candidate_pairs={max_candidate_pairs}); on weakly-"
-            "clustered embeddings sign-LSH volume follows the 1-theta/pi "
-            "collision geometry and grows ~n^2. Run lsh_candidate_fraction "
-            "to price the config, set bucket_cap (right when volume comes "
-            "from a few degenerate buckets), switch to the IVF twin with "
-            "n_centroids scaled to n (right when the geometry is the "
-            "problem), or pass max_candidate_pairs=None to force through."
-        )
+def _lsh_band_pairs(
+    bands: DataFrame, bucket_cap: int | None, max_candidate_pairs: int | None, what: str
+) -> DataFrame:
+    """Distinct (a_id, b_id) vec_id pairs, a_id < b_id, sharing a
+    (band, band_sig) bucket of `bands`, after `bucket_cap` and the
+    pre-flight volume guard. When the guard runs, the posting table is
+    persisted first so the guard's action also materializes it for the
+    pair explode."""
+    from pyspark.storagelevel import StorageLevel
+
+    post = postings(bands, ["band", "band_sig"], "vec_id", cap=bucket_cap)
+    if max_candidate_pairs is not None:
+        post = post.persist(StorageLevel.MEMORY_AND_DISK)
+    guard_pair_volume(
+        post,
+        max_candidate_pairs,
+        f"{what}: on weakly-clustered embeddings sign-LSH volume follows the "
+        "1-theta/pi collision geometry and grows ~n^2. Run "
+        "lsh_candidate_fraction to price the config, set bucket_cap (right "
+        "when volume comes from a few degenerate buckets), switch to the IVF "
+        "twin with n_centroids scaled to n (right when the geometry is the "
+        "problem), or pass max_candidate_pairs=None to force through.",
+    )
+    return key_pairs(post).select("a_id", "b_id").distinct()
 
 
 def embed_neardup_lsh(
@@ -454,9 +449,9 @@ def embed_neardup_lsh(
     threshold. Returns (a_id, b_id, score).
 
     This is the scale path for embed-cosine dedup: the all-pairs cross join
-    (kept as the exact oracle baseline in the registry) is replaced by a
-    self-equi-join on band signatures — shuffle keyed by bucket, candidate
-    volume governed by (n_planes, rows_per_band), never O(n²).
+    (kept as the exact oracle baseline in the registry) is replaced by
+    band-bucket posting lists — shuffle keyed by bucket, candidate volume
+    governed by (n_planes, rows_per_band), never O(n²).
 
     Scores use the same round(x·1e6)-quantized components as the
     embed_neardup_blocked exact baseline (engine-exact, order-independent),
@@ -466,36 +461,14 @@ def embed_neardup_lsh(
     fold fallback (identical values) for non-integral id columns.
 
     `max_candidate_pairs` pre-flights the exact band pair volume and
-    raises above the ceiling (_band_volume_guard; r15 measured the
-    unguarded form killing the driver JVM on a 10x dup-heavy corpus) —
-    the ngram_jaccard_pairs guard contract for the embedding tier.
-
-    Candidate shape (r16, the co_occurrence_edges posting-list recipe,
-    guide §2.3/§2.4): candidates explode in-task from ONE collect_set per
-    (band, band_sig) bucket instead of the band self-join — one exchange
-    instead of two join sides + two sorts, identical pairs by set
-    semantics (each vector appears once per band). When the guard is
-    active the POSTING table is persisted first, so the guard's eager
-    aggregation doubles as its materialization pass and the pair explode
-    reuses the cache instead of paying the band projection again (the
-    ngram_jaccard_pairs persist-before-guard recipe); the cache stores
-    each band_sig once per bucket instead of once per member."""
+    raises ValueError above it (pairs.guard_pair_volume, an eager action
+    at plan build); None skips the check. Candidates come from one
+    posting list per (band, band_sig) bucket (_lsh_band_pairs); ids must
+    be orderable and NULL ids produce no pairs."""
     from pyspark.sql import types as T
-    from pyspark.storagelevel import StorageLevel
 
     bands = lsh_band_table(embeddings, "vec_id", n_planes, rows_per_band, dim, id_col, vec_col)
-    post = bands.groupBy("band", "band_sig").agg(
-        F.collect_set("vec_id").alias("ds")
-    )
-    if max_candidate_pairs is not None:
-        post = post.persist(StorageLevel.MEMORY_AND_DISK)
-    _band_volume_guard(post, max_candidate_pairs, "embed_neardup_lsh")
-    cand = (
-        post.select(F.explode("ds").alias("a_id"), "ds")
-        .select("a_id", F.explode("ds").alias("b_id"))
-        .where(F.col("a_id") < F.col("b_id"))
-        .distinct()
-    )
+    cand = _lsh_band_pairs(bands, None, max_candidate_pairs, "embed_neardup_lsh")
     if isinstance(
         embeddings.schema[id_col].dataType,
         (T.ByteType, T.ShortType, T.IntegerType, T.LongType),
@@ -788,8 +761,8 @@ def knn_graph_lsh(
     vec_col: str = "embedding",
     max_candidate_pairs: int | None = LSH_MAX_CANDIDATE_PAIRS,
 ) -> DataFrame:
-    """Approximate kNN graph via banded hyperplane-LSH: band SELF-join for
-    candidates, blocked batch rescore (score_pairs_blocked's cogrouped
+    """Approximate kNN graph via banded hyperplane-LSH: band-bucket posting
+    lists for candidates, blocked batch rescore (score_pairs_blocked's cogrouped
     einsum — never a per-pair interpreted fold), per-vector top-k. Same
     output schema as knn_graph (vec_id, rank, neighbor_id, score; score is
     the quantized round-4 cosine); recall against the exact graph is
@@ -797,8 +770,8 @@ def knn_graph_lsh(
 
     Unlike lsh_bucketed_topk (whose broadcast-the-queries shape is right
     for a small query set and wrong when queries == corpus), every join
-    here is a shuffle equi-join: bands self-join on (band, band_sig),
-    vectors fan only to occupied score cells. Nothing corpus-sized is ever
+    here is a shuffle: bands group on (band, band_sig), vectors fan only
+    to occupied score cells. Nothing corpus-sized is ever
     broadcast or cross-joined.
 
     WHEN TO USE WHICH TWIN: sign-LSH candidate volume is governed by the
@@ -814,54 +787,29 @@ def knn_graph_lsh(
     rescore pass.
 
     `bucket_cap` drops (band, band_sig) buckets holding more than that many
-    vectors before pairing — a bucket of f vectors emits O(f²) candidate
-    pairs, so one degenerate bucket (e.g. the shared signature of a mass
-    of near-identical embeddings) is quadratic. Production at scale
-    should set it; the vectors it affects are exactly the ones with
-    hundreds of near-duplicates, whose top-k is served by any surviving
-    band. None (default) keeps exact LSH semantics for the oracle.
+    vectors before their posting list is built — a bucket of f vectors
+    emits O(f²) candidate pairs, so one degenerate bucket (e.g. the shared
+    signature of a mass of near-identical embeddings) is quadratic.
+    Production at scale should set it; the vectors it affects are exactly
+    the ones with hundreds of near-duplicates, whose top-k is served by
+    any surviving band. None (default) keeps exact LSH semantics for the
+    oracle. Vector ids must be unique when it is set (the cap counts rows).
 
     `max_candidate_pairs` pre-flights the exact band pair volume AFTER
-    any bucket_cap filter (the pair explode pays the capped volume) and
-    raises above the ceiling — r15 measured the unguarded registered
-    config exhausting the 24g driver JVM on a 10x dup-heavy corpus before
-    any timeout could fire; see _band_volume_guard for the steer text.
+    any bucket_cap (pairs.guard_pair_volume, an eager action at plan
+    build) and raises ValueError above it; None skips the check.
 
-    Candidate shape (r16, the co_occurrence_edges posting-list recipe,
-    guide §2.3/§2.4): candidates explode in-task from ONE collect_set per
-    (band, band_sig) bucket instead of the band self-join; ordered pairs
-    (a < b) enter the distinct — HALF the old a != b join's dedup volume
-    — and the symmetric closure the kNN window needs is emitted by a
-    2-struct explode after it. Identical pairs by set semantics (each
-    vector appears once per band); bucket_cap becomes a per-row size(ds)
-    filter (each bucket's member count IS the old per-bucket row count).
-    When the guard is active the (capped) POSTING table is persisted
-    first, so the guard's eager aggregation doubles as its
-    materialization pass and the pair explode reuses the cache (the
-    ngram_jaccard_pairs persist-before-guard recipe)."""
-    from pyspark.storagelevel import StorageLevel
-
+    Candidates come from one posting list per bucket (_lsh_band_pairs);
+    the unordered pairs are scored once and the symmetric closure the
+    kNN window needs is emitted after the rescore."""
+    if bucket_cap is not None and bucket_cap < 2:
+        raise ValueError(f"bucket_cap must be >= 2 (or None), got {bucket_cap}")
     bands = lsh_band_table(embeddings, "vec_id", n_planes, rows_per_band, dim, id_col, vec_col)
-    post = bands.groupBy("band", "band_sig").agg(
-        F.collect_set("vec_id").alias("ds")
-    )
-    if bucket_cap is not None:
-        if bucket_cap < 2:
-            raise ValueError(f"bucket_cap must be >= 2 (or None), got {bucket_cap}")
-        post = post.where(F.size("ds") <= bucket_cap)
-    if max_candidate_pairs is not None:
-        post = post.persist(StorageLevel.MEMORY_AND_DISK)
-    _band_volume_guard(post, max_candidate_pairs, "knn_graph_lsh")
-    und = (
-        post.select(F.explode("ds").alias("a_id"), "ds")
-        .select("a_id", F.explode("ds").alias("b_id"))
-        .where(F.col("a_id") < F.col("b_id"))
-        .distinct()
-    )
+    und = _lsh_band_pairs(bands, bucket_cap, max_candidate_pairs, "knn_graph_lsh")
     # threshold −1.1 < min cosine keeps every scored pair; NaN (zero-norm)
     # pairs fail the kernel's >= margin test and drop, matching the
     # oracle's isnan filter. Score each UNORDERED pair once and mirror
-    # AFTER (r16): the quantized kernel is exactly symmetric — the dot is
+    # AFTER: the quantized kernel is exactly symmetric — the dot is
     # integer arithmetic below 2^53 and the norm product commutes, so
     # score(a, b) ≡ score(b, a) bit for bit — and scoring a < b only
     # halves both the einsum work and the pair shuffle.
@@ -1186,8 +1134,8 @@ def semantic_dedup(
     cells), max-dot assignment with the highest-cid tiebreak.
 
     Scale: assignment is a broadcast scan projection (no shuffle);
-    within-cluster pairs come from a self-equi-join keyed by list_id —
-    O(Σ cluster²) candidate pairs, governed by n_clusters (pick
+    within-cluster pairs come from one posting list per list_id
+    (pairs.key_pairs) — O(Σ cluster²) candidate pairs, governed by n_clusters (pick
     ~sqrt(corpus) cells so cluster sizes stay bounded), NEVER the global
     all-pairs; scoring is the blocked cogrouped kernel
     (score_pairs_blocked), O(pairs·dim) with exact quantized components.
@@ -1200,11 +1148,10 @@ def semantic_dedup(
         .limit(n_clusters)
         .agg(F.collect_list(F.struct(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))).alias("__cents"))
     )
-    # NOTE: this (vec_id, list_id) projection appears three times in the
-    # final plan (both sides of the pair self-join + the anti-join's left
-    # side), and the centroid-ranking HOF inside it evaluates interpreted
-    # — `storage_level` (MEMORY_AND_DISK in the registered form, r15)
-    # lazily persists it so the assignment scan runs ONCE per execution;
+    # NOTE: this (vec_id, list_id) projection appears twice in the final
+    # plan (the posting lists + the anti-join's left side), and the
+    # centroid-ranking HOF inside it evaluates interpreted — `storage_level`
+    # (MEMORY_AND_DISK in the registered form) lazily persists it so the assignment scan runs ONCE per execution;
     # the table is two ids per vector, safe to pin at any scale. None
     # keeps pure recompute (callers at 100 TB may instead pass a stored
     # kmeans_codebook and materialize the assignment themselves).
@@ -1215,13 +1162,7 @@ def semantic_dedup(
     )
     if storage_level is not None:
         assigned = assigned.persist(storage_level)
-    pairs = (
-        assigned.join(
-            assigned.select(F.col("vec_id").alias("b_id"), "list_id"), "list_id"
-        )
-        .where(F.col("vec_id") < F.col("b_id"))
-        .select(F.col("vec_id").alias("a_id"), "b_id")
-    )
+    pairs = key_pairs(postings(assigned, ["list_id"], "vec_id")).select("a_id", "b_id")
     dup_pairs = score_pairs_blocked(
         pairs, embeddings, threshold=threshold, n_blocks=n_blocks,
         id_col=id_col, vec_col=vec_col,
@@ -2061,51 +2002,46 @@ def _pair_volume_summary(
     lists): given a (vec_id, *keys) assignment table, report the one-row
     (n_vectors, total_pairs, cand_pairs, cand_fraction, join_rows,
     max_bucket) summary — distinct pairs sharing a key, the key-join's
-    raw output volume Σ f·(f−1)/2, and the largest bucket. Three
-    aggregates each reduce to one row before broadcast-scalar cross
-    joins; the pair inequality is `<` on the id (type-agnostic).
+    raw output volume Σ f·(f−1)/2, and the largest bucket. The pair
+    inequality is `<` on the id (ids must be orderable).
 
-    Degenerate inputs yield a well-defined row, never NULLs a pipeline
-    branch could silently swallow: an empty assignment table reports all
-    counts 0, and cand_fraction is NULL-guarded to 0.0 whenever
-    total_pairs = 0 (n_vectors ≤ 1) — a 0-or-1-vector corpus admits no
-    candidate pairs by definition.
+    NULL keys never form a bucket, and NULL ids count toward nothing.
+    Buckets are `collect_list`, not pairs.postings' set: `f` and join_rows
+    count assignment ROWS, so a duplicated assignment counts twice, while
+    duplicate pairs collapse in cand_pairs' distinct.
 
-    Shape (r16, the co_occurrence_edges posting-list recipe, guide
-    §2.3/§2.4): ONE collect_list per bucket feeds all three aggregates —
-    f = size(ds) (collect_list, NOT collect_set: `f` and join_rows count
-    assignment ROWS, so a duplicated assignment must keep counting
-    twice), n_vectors from an explode of the same lists, and the distinct
-    candidate pairs from an in-task pair explode (where duplicate pairs
-    collapse in the distinct exactly as the old self-join's did) —
-    replacing the bucket count + the key-keyed self-join.
+    Degenerate inputs yield a well-defined row: an empty assignment table
+    reports all counts 0, and cand_fraction is 0.0 whenever
+    total_pairs = 0 (n_vectors ≤ 1).
 
-    `storage_level` lazily persists the bucket posting table across its
-    three consuming branches (callers whose assignment build is expensive
-    — the LSH band projection — pass MEMORY_AND_DISK; the default None
-    keeps the pure recompute form)."""
-    post = assign.groupBy(*keys).agg(F.collect_list("vec_id").alias("ds"))
+    `storage_level` lazily persists the bucket table across its three
+    consuming branches (callers whose assignment build is expensive — the
+    LSH band projection — pass MEMORY_AND_DISK; None recomputes)."""
+    post = (
+        assign.where(reduce(lambda a, b: a & b, [F.col(c).isNotNull() for c in keys]))
+        .groupBy(*keys)
+        .agg(F.collect_list("vec_id").alias("ids"))
+    )
     if storage_level is not None:
         post = post.persist(storage_level)
     nvec = (
-        post.select(F.explode("ds").alias("v"))
+        post.select(F.explode("ids").alias("v"))
         .agg(F.count_distinct(F.col("v")).cast("bigint").alias("n_vectors"))
     )
     vol = post.agg(
         F.coalesce(
-            F.sum(F.expr("cast(size(ds) as bigint) * (size(ds) - 1) div 2")),
+            F.sum(F.expr("cast(size(ids) as bigint) * (size(ids) - 1) div 2")),
             F.lit(0),
         )
         .cast("bigint")
         .alias("join_rows"),
-        F.coalesce(F.max(F.size("ds")), F.lit(0))
+        F.coalesce(F.max(F.size("ids")), F.lit(0))
         .cast("bigint")
         .alias("max_bucket"),
     )
     cand = (
-        post.select(F.explode("ds").alias("a_id"), "ds")
-        .select("a_id", F.explode("ds").alias("b_id"))
-        .where(F.col("a_id") < F.col("b_id"))
+        key_pairs(post)
+        .select("a_id", "b_id")
         .distinct()
         .agg(F.count(F.lit(1)).cast("bigint").alias("cand_pairs"))
     )

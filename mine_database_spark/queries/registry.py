@@ -33,6 +33,8 @@ from mine_database_spark.operators import graph as gr
 from mine_database_spark.operators import packing as pk
 from mine_database_spark.operators import sessionize as sz
 from mine_database_spark.operators import similarity as sim
+from mine_database_spark.operators.pairs import key_pairs, postings
+from mine_database_spark.queries import rotation as _rotation
 
 # ---------------------------------------------------------------------------
 # helpers
@@ -5491,28 +5493,13 @@ FROM top
 
 
 def _copurchase_pair_weights(l: DataFrame) -> DataFrame:
-    """(src, dst, w) ordered co-purchase pairs weighted by shared-order
-    count — the weighted input of the k_core/k_truss repeat graph.
-
-    Shape (r16, guide §2.3/§2.4 — the co_occurrence_edges recipe): ONE
-    collect_set per order plus an in-task pair explode replaces the
-    previous distinct (g, id) → self-join-on-g chain; collect_set dedups
-    (g, id) for free, so the pair count per (src, dst) — the number of
-    DISTINCT shared orders — is unchanged (each order contributes each
-    ordered pair at most once, exactly as the join over the distinct li
-    table did). Rows proven identical vs the join form at sf0.01/sf0.1;
-    the DuckDB oracles keep the join formulation."""
-    grp = (
-        l.select(F.col("l_orderkey").alias("g"), F.col("l_partkey").alias("id"))
-        .where(F.col("g").isNotNull())
-        .groupBy("g")
-        .agg(F.collect_set("id").alias("ids"))
-    )
+    """(src, dst, w) co-purchase pairs, src < dst, weighted by the number
+    of DISTINCT orders sharing both parts — the weighted input of the
+    k_core/k_truss repeat graph (pairs.postings per order)."""
+    post = postings(l, ["l_orderkey"], "l_partkey")
     return (
-        grp.select(F.explode("ids").alias("src"), "ids")
-        .select("src", F.explode("ids").alias("dst"))
-        .where(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
+        key_pairs(post)
+        .groupBy(F.col("a_id").alias("src"), F.col("b_id").alias("dst"))
         .agg(F.count(F.lit(1)).alias("w"))
     )
 
@@ -5997,190 +5984,174 @@ FROM orders"""
 # registry
 
 # Dict ORDER matters: the driver's correctness gate hashes only the first 50
-# entries. Round 9 rotation rule (standing): anything never driver-checked,
-# stale since r6, or REWRITTEN this round sits in positions 0-49; long-stable
-# untouched rows (driver-green two or three consecutive rounds) rotate to the
-# tail — those keep local DuckDB parity (tests/test_oracle_parity.py) and
-# bench coverage, and rotate back through the gate in later rounds.
-# Queries whose implementation changed this round — forced into the gate
-# by rotation.gate_order regardless of their last green round. UPDATE THIS
-# EVERY ROUND alongside code changes; tests/test_oracle_parity.py asserts
-# the dict order below matches gate_order(list(QUERIES), history, GATE_TOUCHED).
+# QUERIES entries. The order is derived at import by rotation.gate_order from
+# the CORRECTNESS_r*.json history: never-green queries first, then
+# GATE_TOUCHED, then the stalest last-green round; declaration order breaks
+# ties and is the whole order when no history exists. GATE_TOUCHED is the
+# one manual input: every query whose call graph reaches code changed in
+# this round.
 GATE_TOUCHED: tuple[str, ...] = (
-    # r16 OPTIMIZATION-round rewrites (values identical, plans changed —
-    # forced into the gate so the driver re-proves each one):
-    # - the co_occurrence_edges posting-list derivation (collect_set +
-    #   pair explode replaces distinct → self-join → distinct) feeds the
-    #   six graph queries below, and the same recipe rebuilt the
-    #   k_core/k_truss weighted pair build (_copurchase_pair_weights);
-    #   k_core additionally opts into broadcast_keep
-    "pagerank", "label_propagation", "triangle_count",
-    "triangle_count_deg", "adamic_adar", "degree_distribution",
-    "k_core", "k_truss",
-    # - ngram_jaccard_pairs generates pairs from per-shingle posting
-    #   lists (persisted postings replace the raw shingle cache); the
-    #   minhash tier's lsh_candidate_pairs got the same shape
-    "ngram_jaccard", "ngram_jaccard_capped", "text_knn",
-    "minhash_estimate", "minhash_lsh", "dup_clusters",
-    "keep_best_dedup", "binary_neardup",
-    # - the sign-LSH tier explodes candidates from band-bucket postings
-    #   (embed/knn + both candidate-fraction audits); knn_graph_lsh also
-    #   scores each unordered pair once and mirrors after the rescore
+    # pair generation moved to operators/pairs.py (postings + key_pairs)
+    "pagerank", "label_propagation", "triangle_count", "triangle_count_deg",
+    "adamic_adar", "degree_distribution", "k_core", "k_truss",
+    "ngram_jaccard", "ngram_jaccard_capped", "text_knn", "minhash_estimate",
+    "minhash_lsh", "dup_clusters", "keep_best_dedup", "binary_neardup",
     "embed_neardup_lsh", "knn_graph_lsh", "lsh_candidate_fraction",
-    "ivf_candidate_fraction",
-    # - lang_id_model extracts grams via the mapInArrow numpy batch
-    #   extractor and drops the shared-table persist
-    "lang_id_model",
+    "ivf_candidate_fraction", "winnow_pairs", "ngram_containment",
+    "simhash_hamming", "source_overlap", "semantic_dedup", "token_pmi",
 )
 
+_DECLARED: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "minhash_lsh": q_minhash_lsh,
+    "dup_clusters": q_dup_clusters,
+    "ngram_jaccard_capped": q_ngram_jaccard_capped,
+    "degree_distribution": q_degree_distribution,
+    "ivf_candidate_fraction": q_ivf_candidate_fraction,
+    "k_core": q_k_core,
+    "ngram_jaccard": q_ngram_jaccard,
+    "embed_neardup_lsh": q_embed_neardup_lsh,
+    "label_propagation": q_label_propagation,
+    "knn_graph_lsh": q_knn_graph_lsh,
+    "pagerank": q_pagerank,
+    "lang_id_model": q_lang_id_model,
+    "lsh_candidate_fraction": q_lsh_candidate_fraction,
+    "k_truss": q_k_truss,
+    "binary_neardup": q_binary_neardup,
+    "triangle_count_deg": q_triangle_count_deg,
+    "adamic_adar": q_adamic_adar,
+    "text_knn": q_text_knn,
+    "keep_best_dedup": q_keep_best_dedup,
+    "minhash_estimate": q_minhash_estimate,
+    "triangle_count": q_triangle_count,
+    "bit_prevalence": q_bit_prevalence,
+    "repetition_stats": q_repetition_stats,
+    "quality_rules": q_quality_rules,
+    "pii_scan": q_pii_scan,
+    "ann_ivf_topk": q_ann_ivf_topk,
+    "embed_neardup": q_embed_neardup,
+    "binary_dedup": q_binary_dedup,
+    "binary_profile": q_binary_profile,
+    "span_decontaminate": q_span_decontaminate,
+    "novelty_curve": q_novelty_curve,
+    "span_scrub": q_span_scrub,
+    "fuzzy_contamination": q_fuzzy_contamination,
+    "doc_chunks": q_doc_chunks,
+    "pack_sequences": q_pack_sequences,
+    "domain_mixture_sample": q_domain_mixture_sample,
+    "incremental_dedup": q_incremental_dedup,
+    "quality_classifier": q_quality_classifier,
+    "corpus_stats": q_corpus_stats,
+    "dataset_split": q_dataset_split,
+    "packed_texts": q_packed_texts,
+    "dedup_exact": q_dedup_exact,
+    "simhash": q_simhash,
+    "text_quality": q_text_quality,
+    "token_stats": q_token_stats,
+    "lang_id": q_lang_id,
+    "vocab_oov": q_vocab_oov,
+    "url_stats": q_url_stats,
+    "winnow_fingerprints": q_winnow_fingerprints,
+    "bloom_decontaminate": q_bloom_decontaminate,
+    "blocklist_filter": q_blocklist_filter,
+    "key_skew": q_key_skew,
+    "funnel": q_funnel,
+    "retention": q_retention,
+    "bm25_topk": q_bm25_topk,
+    "ngram_containment": q_ngram_containment,
+    "simhash_hamming": q_simhash_hamming,
+    "dedup_report": q_dedup_report,
+    "char_entropy": q_char_entropy,
+    "pii_pseudonymize": q_pii_pseudonymize,
+    "stratified_sample": q_stratified_sample,
+    "winnow_pairs": q_winnow_pairs,
+    "knn_graph": q_knn_graph,
+    "knn_graph_ivf": q_knn_graph_ivf,
+    "zipf_audit": q_zipf_audit,
+    "cc_luhn_scan": q_cc_luhn_scan,
+    "rate_anomaly": q_rate_anomaly,
+    "event_transitions": q_event_transitions,
+    "embedding_outliers": q_embedding_outliers,
+    "lang_mismatch": q_lang_mismatch,
+    "token_drift": q_token_drift,
+    "inverted_index": q_inverted_index,
+    "hll_vocab": q_hll_vocab,
+    "operator_census": q_operator_census,
+    "ann_cosine_topk": q_ann_cosine_topk,
+    "contamination_check": q_contamination_check,
+    "model_jaccard": q_model_jaccard,
+    "orphan_gc": q_orphan_gc,
+    "regex_filter": q_regex_filter,
+    "token_shards": q_token_shards,
+    "segment_dedup": q_segment_dedup,
+    "assign_ids": q_assign_ids,
+    "multimodal_features": q_multimodal_features,
+    "bpe_token_stats": q_bpe_token_stats,
+    "asof_enrich": q_asof_enrich,
+    "tumbling_window": q_tumbling_window,
+    "sessionize": q_sessionize,
+    "pricing_summary": q_pricing_summary,
+    "top_revenue_orders": q_top_revenue_orders,
+    "region_revenue": q_region_revenue,
+    "frontier_select": q_frontier_select,
+    "first_wins_dedup": q_first_wins_dedup,
+    "content_hash_ids": q_content_hash_ids,
+    "collect_set_union": q_collect_set_union,
+    "rule_coverage_cdf": q_rule_coverage_cdf,
+    "intermediate_rules": q_intermediate_rules,
+    "mass_range_join": q_mass_range_join,
+    "provenance_score": q_provenance_score,
+    "weighted_sample": q_weighted_sample,
+    "topk_per_group": q_topk_per_group,
+    "unigram_logprob": q_unigram_logprob,
+    "bigram_logprob": q_bigram_logprob,
+    "snapshot_diff": q_snapshot_diff,
+    "priority_dedup": q_priority_dedup,
+    "length_percentile_filter": q_length_percentile_filter,
+    "source_overlap": q_source_overlap,
+    "mixture_upsample": q_mixture_upsample,
+    "semantic_contamination": q_semantic_contamination,
+    "edit_distance_pairs": q_edit_distance_pairs,
+    "ngram_candidate_volume": q_ngram_candidate_volume,
+    "ann_lsh_topk": q_ann_lsh_topk,
+    "ngram_diversity_hll": q_ngram_diversity_hll,
+    "profile_table": q_profile_table,
+    "semantic_dedup": q_semantic_dedup,
+    "ngram_diversity": q_ngram_diversity,
+    "cms_token_freq": q_cms_token_freq,
+    "url_dedup": q_url_dedup,
+    "snm_pairs": q_snm_pairs,
+    "decayed_score": q_decayed_score,
+    "hybrid_rrf": q_hybrid_rrf,
+    "mad_anomaly": q_mad_anomaly,
+    "source_top_terms": q_source_top_terms,
+    "collapse_repeats": q_collapse_repeats,
+    "embedding_drift": q_embedding_drift,
+    "shard_balance": q_shard_balance,
+    "ks_drift": q_ks_drift,
+    "cdc_dedup": q_cdc_dedup,
+    "token_pmi": q_token_pmi,
+    "hist_quantiles": q_hist_quantiles,
+    "html_extract": q_html_extract,
+    "normalized_dedup": q_normalized_dedup,
+    "ms2_search": q_ms2_search,
+    "spectral_cosine": q_spectral_cosine,
+    "ann_pq_topk": q_ann_pq_topk,
+    "ann_pq_rescored": q_ann_pq_rescored,
+    "ann_ivf_pq": q_ann_ivf_pq,
+    "mass_range_join_bucketed": q_mass_range_join_bucketed,
+    "copurchase_reach": q_copurchase_reach,
+    "order_chain_paths": q_order_chain_paths,
+    "tfidf_topk": q_tfidf_topk,
+    "adduct_search": q_adduct_search,
+    "product_of_native": q_product_of_native,
+    "quiet_customers": q_quiet_customers,
+}
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    # --- gate (positions 0-49; the driver hashes these) ---
-    # order generated by `python -m mine_database_spark.queries.rotation`
-    # (never-green first, then GATE_TOUCHED, then stalest last-green round)
-    "minhash_lsh": q_minhash_lsh,  # TOUCHED
-    "dup_clusters": q_dup_clusters,  # TOUCHED
-    "ngram_jaccard_capped": q_ngram_jaccard_capped,  # TOUCHED
-    "degree_distribution": q_degree_distribution,  # TOUCHED
-    "ivf_candidate_fraction": q_ivf_candidate_fraction,  # TOUCHED
-    "k_core": q_k_core,  # TOUCHED
-    "ngram_jaccard": q_ngram_jaccard,  # TOUCHED
-    "embed_neardup_lsh": q_embed_neardup_lsh,  # TOUCHED
-    "label_propagation": q_label_propagation,  # TOUCHED
-    "knn_graph_lsh": q_knn_graph_lsh,  # TOUCHED
-    "pagerank": q_pagerank,  # TOUCHED
-    "lang_id_model": q_lang_id_model,  # TOUCHED
-    "lsh_candidate_fraction": q_lsh_candidate_fraction,  # TOUCHED
-    "k_truss": q_k_truss,  # TOUCHED
-    "binary_neardup": q_binary_neardup,  # TOUCHED
-    "triangle_count_deg": q_triangle_count_deg,  # TOUCHED
-    "adamic_adar": q_adamic_adar,  # TOUCHED
-    "text_knn": q_text_knn,  # TOUCHED
-    "keep_best_dedup": q_keep_best_dedup,  # TOUCHED
-    "minhash_estimate": q_minhash_estimate,  # TOUCHED
-    "triangle_count": q_triangle_count,  # TOUCHED
-    "bit_prevalence": q_bit_prevalence,  # r12
-    "repetition_stats": q_repetition_stats,  # r12
-    "quality_rules": q_quality_rules,  # r12
-    "pii_scan": q_pii_scan,  # r12
-    "ann_ivf_topk": q_ann_ivf_topk,  # r12
-    "embed_neardup": q_embed_neardup,  # r12
-    "binary_dedup": q_binary_dedup,  # r13
-    "binary_profile": q_binary_profile,  # r13
-    "span_decontaminate": q_span_decontaminate,  # r13
-    "novelty_curve": q_novelty_curve,  # r13
-    "span_scrub": q_span_scrub,  # r13
-    "fuzzy_contamination": q_fuzzy_contamination,  # r13
-    "doc_chunks": q_doc_chunks,  # r13
-    "pack_sequences": q_pack_sequences,  # r13
-    "domain_mixture_sample": q_domain_mixture_sample,  # r13
-    "incremental_dedup": q_incremental_dedup,  # r13
-    "quality_classifier": q_quality_classifier,  # r13
-    "corpus_stats": q_corpus_stats,  # r13
-    "dataset_split": q_dataset_split,  # r13
-    "packed_texts": q_packed_texts,  # r13
-    "dedup_exact": q_dedup_exact,  # r13
-    "simhash": q_simhash,  # r13
-    "text_quality": q_text_quality,  # r13
-    "token_stats": q_token_stats,  # r13
-    "lang_id": q_lang_id,  # r13
-    "vocab_oov": q_vocab_oov,  # r13
-    "url_stats": q_url_stats,  # r13
-    "winnow_fingerprints": q_winnow_fingerprints,  # r13
-    "bloom_decontaminate": q_bloom_decontaminate,  # r13
-    # --- tail (locally parity-tested + benched every round; rotates back in) ---
-    "blocklist_filter": q_blocklist_filter,  # r13
-    "key_skew": q_key_skew,  # r13
-    "funnel": q_funnel,  # r13
-    "retention": q_retention,  # r13
-    "bm25_topk": q_bm25_topk,  # r13
-    "ngram_containment": q_ngram_containment,  # r13
-    "simhash_hamming": q_simhash_hamming,  # r13
-    "dedup_report": q_dedup_report,  # r13
-    "char_entropy": q_char_entropy,  # r13
-    "pii_pseudonymize": q_pii_pseudonymize,  # r13
-    "stratified_sample": q_stratified_sample,  # r13
-    "winnow_pairs": q_winnow_pairs,  # r13
-    "knn_graph": q_knn_graph,  # r13
-    "knn_graph_ivf": q_knn_graph_ivf,  # r13
-    "zipf_audit": q_zipf_audit,  # r13
-    "cc_luhn_scan": q_cc_luhn_scan,  # r14
-    "rate_anomaly": q_rate_anomaly,  # r14
-    "event_transitions": q_event_transitions,  # r14
-    "embedding_outliers": q_embedding_outliers,  # r14
-    "lang_mismatch": q_lang_mismatch,  # r14
-    "token_drift": q_token_drift,  # r14
-    "inverted_index": q_inverted_index,  # r14
-    "hll_vocab": q_hll_vocab,  # r14
-    "operator_census": q_operator_census,  # r14
-    "ann_cosine_topk": q_ann_cosine_topk,  # r14
-    "contamination_check": q_contamination_check,  # r14
-    "model_jaccard": q_model_jaccard,  # r14
-    "orphan_gc": q_orphan_gc,  # r14
-    "regex_filter": q_regex_filter,  # r14
-    "token_shards": q_token_shards,  # r14
-    "segment_dedup": q_segment_dedup,  # r14
-    "assign_ids": q_assign_ids,  # r14
-    "multimodal_features": q_multimodal_features,  # r14
-    "bpe_token_stats": q_bpe_token_stats,  # r14
-    "asof_enrich": q_asof_enrich,  # r14
-    "tumbling_window": q_tumbling_window,  # r14
-    "sessionize": q_sessionize,  # r14
-    "pricing_summary": q_pricing_summary,  # r14
-    "top_revenue_orders": q_top_revenue_orders,  # r14
-    "region_revenue": q_region_revenue,  # r14
-    "frontier_select": q_frontier_select,  # r14
-    "first_wins_dedup": q_first_wins_dedup,  # r14
-    "content_hash_ids": q_content_hash_ids,  # r14
-    "collect_set_union": q_collect_set_union,  # r14
-    "rule_coverage_cdf": q_rule_coverage_cdf,  # r14
-    "intermediate_rules": q_intermediate_rules,  # r14
-    "mass_range_join": q_mass_range_join,  # r14
-    "provenance_score": q_provenance_score,  # r14
-    "weighted_sample": q_weighted_sample,  # r14
-    "topk_per_group": q_topk_per_group,  # r14
-    "unigram_logprob": q_unigram_logprob,  # r14
-    "bigram_logprob": q_bigram_logprob,  # r14
-    "snapshot_diff": q_snapshot_diff,  # r14
-    "priority_dedup": q_priority_dedup,  # r14
-    "length_percentile_filter": q_length_percentile_filter,  # r14
-    "source_overlap": q_source_overlap,  # r14
-    "mixture_upsample": q_mixture_upsample,  # r14
-    "semantic_contamination": q_semantic_contamination,  # r14
-    "edit_distance_pairs": q_edit_distance_pairs,  # r14
-    "ngram_candidate_volume": q_ngram_candidate_volume,  # r15
-    "ann_lsh_topk": q_ann_lsh_topk,  # r15
-    "ngram_diversity_hll": q_ngram_diversity_hll,  # r15
-    "profile_table": q_profile_table,  # r15
-    "semantic_dedup": q_semantic_dedup,  # r15
-    "ngram_diversity": q_ngram_diversity,  # r15
-    "cms_token_freq": q_cms_token_freq,  # r15
-    "url_dedup": q_url_dedup,  # r15
-    "snm_pairs": q_snm_pairs,  # r15
-    "decayed_score": q_decayed_score,  # r15
-    "hybrid_rrf": q_hybrid_rrf,  # r15
-    "mad_anomaly": q_mad_anomaly,  # r15
-    "source_top_terms": q_source_top_terms,  # r15
-    "collapse_repeats": q_collapse_repeats,  # r15
-    "embedding_drift": q_embedding_drift,  # r15
-    "shard_balance": q_shard_balance,  # r15
-    "ks_drift": q_ks_drift,  # r15
-    "cdc_dedup": q_cdc_dedup,  # r15
-    "token_pmi": q_token_pmi,  # r15
-    "hist_quantiles": q_hist_quantiles,  # r15
-    "html_extract": q_html_extract,  # r15
-    "normalized_dedup": q_normalized_dedup,  # r15
-    "ms2_search": q_ms2_search,  # r15
-    "spectral_cosine": q_spectral_cosine,  # r15
-    "ann_pq_topk": q_ann_pq_topk,  # r15
-    "ann_pq_rescored": q_ann_pq_rescored,  # r15
-    "ann_ivf_pq": q_ann_ivf_pq,  # r15
-    "mass_range_join_bucketed": q_mass_range_join_bucketed,  # r15
-    "copurchase_reach": q_copurchase_reach,  # r15
-    "order_chain_paths": q_order_chain_paths,  # r15
-    "tfidf_topk": q_tfidf_topk,  # r15
-    "adduct_search": q_adduct_search,  # r15
-    "product_of_native": q_product_of_native,  # r15
-    "quiet_customers": q_quiet_customers,  # r15
+    n: _DECLARED[n]
+    for n in _rotation.gate_order(
+        list(_DECLARED), _rotation.load_green_history(_rotation.repo_root()), GATE_TOUCHED
+    )
 }
 
 ORACLES: dict[str, str] = {

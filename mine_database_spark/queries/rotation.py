@@ -11,12 +11,8 @@ history so a mis-rotation cannot land silently (r11 verdict #6):
   as GATE_TOUCHED — the one input that cannot be derived from artifacts),
 - then everything else, stalest last-green round first.
 
-Ties keep the caller-supplied order, so an already-correctly-rotated
-dict is a fixed point of `gate_order` — which is exactly what
-tests/test_oracle_parity.py asserts against the literal. Regenerate the
-literal order for a new round with:
-
-    python -m mine_database_spark.queries.rotation
+Ties keep the caller-supplied order (the registry's declaration order).
+registry.QUERIES is built with this order at import.
 """
 
 from __future__ import annotations
@@ -83,24 +79,3 @@ def repo_root() -> Path:
     """The checkout root holding the CORRECTNESS_r*.json artifacts."""
     return Path(__file__).resolve().parents[2]
 
-
-def main() -> None:  # pragma: no cover - regeneration helper
-    from mine_database_spark.queries.registry import GATE_TOUCHED, QUERIES
-
-    hist = load_green_history(repo_root())
-    order = gate_order(list(QUERIES), hist, GATE_TOUCHED)
-    try:
-        for i, n in enumerate(order):
-            tag = (
-                "NEW"
-                if n not in hist
-                else ("TOUCHED" if n in GATE_TOUCHED else f"r{hist[n]}")
-            )
-            gate = "gate" if i < 50 else "tail"
-            print(f"{i:3d} {gate} {tag:>8} \"{n}\": q_{n},")
-    except BrokenPipeError:  # `| head` closing the pipe is fine
-        pass
-
-
-if __name__ == "__main__":  # pragma: no cover
-    main()

@@ -535,6 +535,19 @@ def test_ngram_jaccard_persistence_is_caller_controlled(spark):
     spark.catalog.clearCache()
 
 
+def _assert_cap_below_collect(df):
+    """The hot-key cap (per-key count + left-semi join on the keys under
+    the cap) must sit BELOW the collect_set aggregate in the physical plan,
+    so a capped key's posting array is never built."""
+    plan = df.sparkSession.sparkContext._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "simple"
+    )
+    top = plan.index("functions=[collect_set(")
+    below = plan[top:]
+    assert "LeftSemi" in below and "functions=[count(1)]" in below, plan
+    assert "LeftSemi" not in plan[:top], plan
+
+
 def test_ngram_jaccard_df_cap(spark):
     """df_cap drops hot shingles from the pair join and the size counts
     consistently — docs related ONLY through a stop-shingle produce no pair."""
@@ -552,6 +565,7 @@ def test_ngram_jaccard_df_cap(spark):
     # df cap of 2 kills the df=3 stop-shingle → no pairs survive
     capped = ngram_jaccard_pairs(docs, k=2, threshold=0.01, df_cap=2)
     assert capped.count() == 0
+    _assert_cap_below_collect(capped)
 
 
 def test_ngram_jaccard_candidate_volume_guard(spark):
@@ -1290,6 +1304,20 @@ def test_embed_neardup_blocked_equals_crossjoin(spark):
         assert got == naive, f"n_blocks={nb}"
 
 
+def _start_data_batches_only(spark, writer):
+    """Start a stateful stream with no-data micro-batches off. A
+    ProcessingTimeTimeout query otherwise runs a batch on every trigger, so
+    processAllAvailable() would never see the source drained. The setting
+    is captured when the query starts; the session value is restored."""
+    key = "spark.sql.streaming.noDataMicroBatches.enabled"
+    old = spark.conf.get(key, "true")
+    spark.conf.set(key, "false")
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, old)
+
+
 def test_streaming_stateful_dedup_with_ttl(spark, tmp_path):
     """The TTL variant must keep exact-dedup semantics within a run (state
     refresh on every sighting; eviction only on a quiet period) — this pins
@@ -1306,29 +1334,24 @@ def test_streaming_stateful_dedup_with_ttl(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .csv(str(src))
     )
-    q = (
-        exact_dedup_stream(stream, state_ttl_minutes=60)
-        .writeStream.format("memory")
-        .queryName("dedup_stream_ttl_test")
-        .outputMode("update")
-        .trigger(processingTime="1 second")
-        .start()
+    q = _start_data_batches_only(
+        spark,
+        (
+            exact_dedup_stream(stream, state_ttl_minutes=60)
+            .writeStream.format("memory")
+            .queryName("dedup_stream_ttl_test")
+            .outputMode("update")
+            .trigger(processingTime="1 second")
+        ),
     )
     # a query with registered processing-time timeouts never self-terminates
-    # (it idles waiting for the TTL) — poll the sink, then stop explicitly
-    import time as _time
-
-    survivors: list[int] = []
+    # (it idles waiting for the TTL) — drain both files, then stop explicitly
     try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            survivors = sorted(
-                r["survivor_id"]
-                for r in spark.sql("select survivor_id from dedup_stream_ttl_test").collect()
-            )
-            if len(survivors) >= 3:
-                break
-            _time.sleep(1)
+        q.processAllAvailable()
+        survivors = sorted(
+            r["survivor_id"]
+            for r in spark.sql("select survivor_id from dedup_stream_ttl_test").collect()
+        )
     finally:
         q.stop()
     assert len(survivors) == 3, survivors
@@ -1537,26 +1560,21 @@ def test_streaming_minhash_neardup(spark, tmp_path):
         .csv(str(src))
     )
     # ProcessingTimeTimeout queries never self-terminate (they idle
-    # waiting for the TTL) — poll the sink, then stop, as the
+    # waiting for the TTL) — drain the files, then stop, as the
     # exact_dedup_stream TTL test does
-    q = (
-        minhash_neardup_stream(stream, state_ttl_minutes=60)
-        .writeStream.format("memory")
-        .queryName("mh_neardup_stream_test")
-        .outputMode("update")
-        .trigger(processingTime="1 second")
-        .start()
+    q = _start_data_batches_only(
+        spark,
+        (
+            minhash_neardup_stream(stream, state_ttl_minutes=60)
+            .writeStream.format("memory")
+            .queryName("mh_neardup_stream_test")
+            .outputMode("update")
+            .trigger(processingTime="1 second")
+        ),
     )
-    import time as _time
-
-    rows = []
     try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            rows = spark.sql("select * from mh_neardup_stream_test").collect()
-            if rows:
-                break
-            _time.sleep(1)
+        q.processAllAvailable()
+        rows = spark.sql("select * from mh_neardup_stream_test").collect()
     finally:
         q.stop()
     pairs = {(r["doc_id"], r["matched_id"]) for r in rows}
@@ -1600,43 +1618,29 @@ def test_streaming_minhash_ttl_eviction(spark, tmp_path):
         .csv(str(src))
     )
     ttl_sec = 3.0
-    q = (
-        minhash_neardup_stream(stream, state_ttl_minutes=ttl_sec / 60.0)
-        .writeStream.format("memory")
-        .queryName("mh_ttl_evict_test")
-        .outputMode("update")
-        .trigger(processingTime="1 second")
-        .start()
+    q = _start_data_batches_only(
+        spark,
+        (
+            minhash_neardup_stream(stream, state_ttl_minutes=ttl_sec / 60.0)
+            .writeStream.format("memory")
+            .queryName("mh_ttl_evict_test")
+            .outputMode("update")
+            .trigger(processingTime="1 second")
+        ),
     )
 
-    def _wait_rows_in(n: int, deadline_sec: float = 240) -> None:
-        # file-source rows actually pulled through the query (not sink rows:
-        # most batches here emit nothing). 240s deadline: under a fully
-        # loaded 32-core suite run, 1-second-trigger micro-batches can stall
-        # for minutes — a 90s deadline flaked exactly once that way (r13)
-        deadline = _time.time() + deadline_sec
-        while _time.time() < deadline:
-            seen = sum(int(p["numInputRows"]) for p in q.recentProgress)
-            if seen >= n:
-                return
-            _time.sleep(0.5)
-        raise AssertionError(f"stream never consumed {n} input rows")
-
+    # each processAllAvailable blocks until the file just written has been
+    # processed and committed; only the TTL quiet period is wall-clock
     try:
-        _wait_rows_in(1)  # doc 1 processed; its TTL clock is now running
+        q.processAllAvailable()  # doc 1 processed; its TTL clock is now running
         _time.sleep(ttl_sec + 3.0)  # quiet period: let every bucket expire
         (src / "b.csv").write_text(f'99,"{t_other}"\n')
-        _wait_rows_in(2)  # eviction batch ran (doc 1's buckets had no data)
+        q.processAllAvailable()  # eviction batch ran (doc 1's buckets had no data)
         (src / "c.csv").write_text(f'3,"{t_dup}"\n')
-        _wait_rows_in(3)  # doc 3 re-seeds the (now-empty) buckets
+        q.processAllAvailable()  # doc 3 re-seeds the (now-empty) buckets
         (src / "d.csv").write_text(f'4,"{t_dup}"\n')
-        rows = []
-        deadline = _time.time() + 240
-        while _time.time() < deadline:
-            rows = spark.sql("select * from mh_ttl_evict_test").collect()
-            if any(r["doc_id"] == 4 for r in rows):
-                break
-            _time.sleep(0.5)
+        q.processAllAvailable()
+        rows = spark.sql("select * from mh_ttl_evict_test").collect()
     finally:
         q.stop()
     pairs = {(r["doc_id"], r["matched_id"]) for r in rows}
@@ -1994,6 +1998,7 @@ def test_knn_graph_lsh_bucket_cap(spark):
     assert clone_edges  # uncapped: clones find each other
     capped = knn_graph_lsh(df, k=5, dim=4, bucket_cap=5).collect()
     assert not any(r["vec_id"] < 6 and r["neighbor_id"] < 6 for r in capped), capped
+    _assert_cap_below_collect(knn_graph_lsh(df, k=5, dim=4, bucket_cap=5))
 
 
 def test_snapshot_diff_statuses(spark):
@@ -5114,24 +5119,19 @@ def test_streaming_binary_neardup_trailer_variants(spark, tmp_path):
         .csv(str(src))
         .select("media_id", F.unhex(F.col("hex")).alias("blob"))
     )
-    q = (
-        binary_neardup_stream(stream, state_ttl_minutes=60)
-        .writeStream.format("memory")
-        .queryName("bin_neardup_stream_test")
-        .outputMode("update")
-        .trigger(processingTime="1 second")
-        .start()
+    q = _start_data_batches_only(
+        spark,
+        (
+            binary_neardup_stream(stream, state_ttl_minutes=60)
+            .writeStream.format("memory")
+            .queryName("bin_neardup_stream_test")
+            .outputMode("update")
+            .trigger(processingTime="1 second")
+        ),
     )
-    import time as _time
-
-    rows = []
     try:
-        deadline = _time.time() + 120
-        while _time.time() < deadline:
-            rows = spark.sql("select * from bin_neardup_stream_test").collect()
-            if rows:
-                break
-            _time.sleep(1)
+        q.processAllAvailable()
+        rows = spark.sql("select * from bin_neardup_stream_test").collect()
     finally:
         q.stop()
     pairs = {(r["doc_id"], r["matched_id"]) for r in rows}
@@ -5392,6 +5392,17 @@ def test_co_occurrence_edges_matches_self_join_form(spark):
     want = sorted(map(tuple, reference.collect()))
     assert got == want
     assert got == [("a", "b"), ("b", "a"), ("c", "d"), ("d", "c")]
+
+    # a capped caller (the cap needs distinct (group, item) rows): the NULL
+    # group never forms a posting list, and group 2's NULL item does not
+    # count toward its cap of 2
+    from mine_database_spark.operators.pairs import postings
+
+    capped = {
+        r["g"]: sorted(r["ids"])
+        for r in postings(df.distinct(), ["g"], "it", cap=2).collect()
+    }
+    assert capped == {1: ["a", "b"], 2: ["c", "d"], 3: ["z"], 4: ["a", "b"]}
 
 
 def test_ngram_jaccard_posting_lists_match_self_join_form(spark):
