@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from mine_database_spark.functions.text import hex_uniform
 from mine_database_spark.operators.expansion import edge_table
+from mine_database_spark.operators.iterate import iterate
 
 
 # ---------------------------------------------------------------------------
@@ -68,31 +69,40 @@ def cascade_remove(compounds: DataFrame, reactions: DataFrame, checked_ids: Data
     return orphan_gc(compounds_out, reactions_out)
 
 
-def orphan_gc(compounds: DataFrame, reactions: DataFrame, max_rounds: int = 10) -> tuple[DataFrame, DataFrame]:
-    """Iterative orphan removal to fixpoint (bounded by generation depth):
-    a predicted compound with no producing reaction is deleted, along with
-    reactions it was a reactant of — which can orphan more compounds."""
-    for _ in range(max_rounds):
+def _orphans(compounds: DataFrame, reactions: DataFrame) -> DataFrame:
+    """Predicted compounds no reaction produces."""
+    produced = edge_table(reactions).where(F.col("role") == "product").select(F.col("c_id").alias("_id"))
+    return compounds.where(F.col("type") == "Predicted").join(produced, "_id", "left_anti").select("_id")
+
+
+def orphan_gc(compounds: DataFrame, reactions: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Iterative orphan removal to fixpoint: a predicted compound with no
+    producing reaction is deleted, along with reactions it was a reactant
+    of — which can orphan more compounds. Each round strictly shrinks the
+    compound set, so the loop (`iterate`, no round cap) ends at the first
+    state without orphans."""
+
+    def step(history):
+        compounds, reactions = history[-1]
+        orphans = _orphans(compounds, reactions)
         edges = edge_table(reactions)
-        produced = edges.where(F.col("role") == "product").select(F.col("c_id").alias("_id")).distinct()
-        orphans = (
-            compounds.where(F.col("type") == "Predicted")
-            .join(produced, "_id", "left_anti")
-            .select("_id")
-        )
-        if orphans.isEmpty():
-            return compounds, reactions
         dead_rxns = (
             edges.where(F.col("role") == "reactant")
             .join(orphans, edges["c_id"] == orphans["_id"], "left_semi")
             .select("rxn_id")
             .distinct()
         )
-        compounds = compounds.join(orphans, "_id", "left_anti").localCheckpoint(eager=True)
-        reactions = reactions.join(dead_rxns, reactions["_id"] == dead_rxns["rxn_id"], "left_anti").localCheckpoint(
-            eager=True
+        return (
+            compounds.join(orphans, "_id", "left_anti"),
+            reactions.join(dead_rxns, reactions["_id"] == dead_rxns["rxn_id"], "left_anti"),
         )
-    return compounds, reactions
+
+    if _orphans(compounds, reactions).isEmpty():
+        return compounds, reactions
+    history, _ = iterate(
+        (compounds, reactions), step, max_rounds=None, done=lambda prev, new: _orphans(*new).isEmpty()
+    )
+    return history[-1]
 
 
 # ---------------------------------------------------------------------------

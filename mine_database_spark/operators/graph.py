@@ -6,17 +6,20 @@ Reference semantics (studied, not copied): `find_minimal_set` reverse-BFS
 
 Spark-first design: the graph is an edge DataFrame `(src, dst)`; each BFS
 round is one distributed join + anti-join. The frontier is usually small so
-it is broadcast; the visited set grows monotonically and is localCheckpointed
-every few rounds to truncate lineage (mandatory for iterative Spark jobs).
-At 100 TB the edge table is the big side and stays shuffle-partitioned on
-`src`; only the frontier moves.
+it is broadcast. Every loop that checkpoints a round runs on
+`iterate.iterate`; `bfs_reach_bipartite` is the one lazy fixed-hop loop
+(no checkpoint, no job at build). At 100 TB the edge table is the big side
+and stays shuffle-partitioned on `src`; only the frontier moves.
 """
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from mine_database_spark.operators.iterate import iterate
 from mine_database_spark.operators.pairs import key_pairs, postings
 
 
@@ -26,7 +29,6 @@ def bfs_reach_bipartite(
     max_iter: int,
     group_col: str = "g",
     id_col: str = "id",
-    early_exit: bool = False,
 ) -> DataFrame:
     """Reachability over a co-occurrence graph WITHOUT materializing pair edges.
 
@@ -38,8 +40,8 @@ def bfs_reach_bipartite(
     items-per-group and its `distinct` dominates the shuffle (measured 2.5x
     slower end-to-end at sf0.1); the bipartite form shuffles only the
     membership table — pre-bucketable on either key — and broadcasts the
-    frontier/group sets. `early_exit` trades one `isEmpty` job per round for
-    skipping dead rounds; leave it off for small fixed hop counts.
+    frontier/group sets. The loop stays lazy: building the result runs no
+    job, so it suits small fixed hop counts.
 
     Reference semantics: find_minimal_set reverse BFS
     (/root/reference/minedatabase/pickaxe.py:995-1044) over the implicit
@@ -66,19 +68,9 @@ def bfs_reach_bipartite(
             .distinct()
             .join(visited.select(id_col), id_col, "left_anti")
         )
-        if early_exit:
-            # action-ful mode: materialize the round (truncates lineage; the
-            # checkpoint RDD is GC-cleaned with the DataFrame) so isEmpty and
-            # later rounds reuse it
-            nxt = nxt.localCheckpoint(eager=True)
-            if nxt.isEmpty():
-                break
-        # else: stay fully lazy — building the result must trigger zero jobs
-        # (plan-build contract), and under AQE even a lazy localCheckpoint
-        # forces the upstream broadcast stages. No persistence either: cache()
-        # pins the session CacheManager until an explicit unpersist (leaks
-        # across calls), and for the small fixed hop counts this mode serves,
-        # re-deriving the shared prefix is cheaper than pinning it.
+        # no checkpoint or cache: under AQE even a lazy localCheckpoint
+        # forces the upstream broadcast stages, and cache() pins the
+        # CacheManager until an explicit unpersist
         visited = visited.unionByName(nxt.withColumn("hops", F.lit(it)))
         frontier = nxt
     return visited
@@ -97,14 +89,16 @@ def connected_components(
     step that turns near-duplicate PAIRS (minhash/simhash/embedding) into
     dedup CLUSTERS with a canonical survivor per cluster.
 
-    Each round is one join + min-aggregate on the symmetrized edge table,
-    localCheckpointed to truncate lineage; rounds needed = graph diameter
-    (near-dup clusters are shallow, typically 2-4). At 100 TB the edge table
+    Each round is one join + min-aggregate on the symmetrized edge table
+    (`iterate`; stops at the first round that moves no label). Rounds
+    needed = graph diameter (near-dup clusters are shallow, typically 2-4);
+    a graph still moving after `max_iter` rounds raises RuntimeError rather
+    than return plausible-but-wrong clusters. At 100 TB the edge table
     stays partitioned by src across rounds; only labels shuffle.
     """
     e = edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
     # lazy localCheckpoint, not cache(): reused every round once the first
-    # count() materializes it, and GC-cleaned with the DataFrame instead of
+    # round materializes it, and GC-cleaned with the DataFrame instead of
     # leaking a CacheManager entry per invocation
     sym = (
         e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
@@ -112,32 +106,58 @@ def connected_components(
         .localCheckpoint(eager=False)
     )
     labels = sym.select(F.col("src").alias("id")).distinct().withColumn("label", F.col("id"))
-    labels = labels.localCheckpoint(eager=True)
-    for _ in range(max_iter):
+
+    def step(history):
+        labels = history[-1]
         nbr_min = (
             sym.join(labels.select(F.col("id").alias("dst"), F.col("label").alias("dlabel")), "dst")
             .groupBy("src")
             .agg(F.min("dlabel").alias("nlabel"))
         )
-        new_labels = (
-            labels.join(nbr_min.withColumnRenamed("src", "id"), "id", "left")
-            .select("id", F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label"))
-        ).localCheckpoint(eager=True)
-        changed = new_labels.join(labels, ["id", "label"], "left_anti").count()
-        labels = new_labels
-        if changed == 0:
-            break
-    else:
-        # the loop ran out of rounds with labels still moving: the result is
-        # NOT a fixpoint and downstream cluster assignments would be silently
-        # wrong (diameter > max_iter). Surface it instead of returning
-        # plausible-but-wrong components.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            f"({changed} labels still changing); raise max_iter above the "
-            "component diameter"
+        return labels.join(nbr_min.withColumnRenamed("src", "id"), "id", "left").select(
+            "id", F.least(F.col("label"), F.coalesce("nlabel", "label")).alias("label")
         )
-    return labels.select("id", F.col("label").alias("component"))
+
+    history, converged = iterate(
+        labels.localCheckpoint(eager=True), step, max_rounds=max_iter,
+        done=lambda prev, new: new.join(prev, ["id", "label"], "left_anti").isEmpty(),
+    )
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} rounds; "
+            "raise max_iter above the component diameter"
+        )
+    return history[-1].select("id", F.col("label").alias("component"))
+
+
+def _path_levels(
+    edges: DataFrame, frontier: DataFrame, hops: int, excluded: DataFrame | None = None
+) -> list:
+    """The simple-path walk `enumerate_paths` and `network.pathway_bfs`
+    share. `frontier` is (node, nodes), `nodes` the path array ending at
+    `node`; each round extends every path by one edge (src, dst, ...)
+    whose `dst` is not already on it and dedups; the walk stops after
+    `hops` rounds or at the first empty level. `excluded` (one id column)
+    leaves the walk by anti-joins on the frontier and both edge endpoints
+    before the loop. Returns every level, the (filtered) frontier first."""
+    if excluded is not None:
+        bad = excluded.select(F.col(excluded.columns[0]).alias("node")).distinct()
+        frontier = frontier.join(bad, "node", "left_anti")
+        edges = edges.join(bad.withColumnRenamed("node", "src"), "src", "left_anti")
+        edges = edges.join(bad.withColumnRenamed("node", "dst"), "dst", "left_anti")
+
+    def step(history):
+        return (
+            edges.join(history[-1].withColumnRenamed("node", "src"), "src")
+            .where(~F.array_contains(F.col("nodes"), F.col("dst")))
+            .select(
+                F.col("dst").alias("node"),
+                F.concat(F.col("nodes"), F.array(F.col("dst"))).alias("nodes"),
+            )
+            .distinct()
+        )
+
+    return iterate(frontier, step, max_rounds=hops, done=lambda prev, new: new.isEmpty())[0]
 
 
 def enumerate_paths(
@@ -152,45 +172,22 @@ def enumerate_paths(
 
     Returns one row per path prefix: (node, path, length) where `path` is the
     '->'-joined node sequence and `node` its tail. Each round is one join on
-    the frontier's tail node; cycles are cut by a substring guard on the
-    rendered path. At 100 TB the edge table is the big side, partitioned on
-    `src`; only the (small) frontier with its path strings shuffles, and each
-    round localCheckpoints to keep lineage flat across iterations.
+    the frontier's tail node (`_path_levels`); cycles are cut by
+    `array_contains` on the path array. At 100 TB the edge table is the big
+    side, partitioned on `src`; only the (small) frontier with its paths
+    shuffles.
 
     `excluded_nodes` (one id column) removes nodes from the walk entirely —
-    no path may start at, pass through, or end on one. This is the generic
-    node-guard pathway_bfs builds its NP-likeness floor on
-    (pathway_search.py:32-43): one anti-join on each edge endpoint before
-    the iteration, not a per-hop predicate.
+    no path may start at, pass through, or end on one (pathway_search.py:
+    32-43's node guard): one anti-join on each edge endpoint before the
+    walk, not a per-hop predicate.
     """
     start_col = starts.columns[0]
     frontier = starts.select(
         F.col(start_col).alias("node"), F.array(F.col(start_col)).alias("nodes")
     ).distinct()
-    if excluded_nodes is not None:
-        bad = excluded_nodes.select(F.col(excluded_nodes.columns[0]).alias("node")).distinct()
-        frontier = frontier.join(bad, "node", "left_anti")
-        edges = edges.join(bad.withColumnRenamed("node", "src"), "src", "left_anti")
-        edges = edges.join(bad.withColumnRenamed("node", "dst"), "dst", "left_anti")
-    levels = [frontier]
-    for it in range(max_depth - 1):
-        frontier = (
-            edges.join(frontier.withColumnRenamed("node", "src"), "src")
-            .where(~F.array_contains(F.col("nodes"), F.col("dst")))
-            .select(
-                F.col("dst").alias("node"),
-                F.concat(F.col("nodes"), F.array(F.col("dst"))).alias("nodes"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        if frontier.isEmpty():
-            break
-        levels.append(frontier)
-    out = levels[0]
-    for lv in levels[1:]:
-        out = out.unionByName(lv)
-    return out.select(
+    levels = _path_levels(edges, frontier, max_depth - 1, excluded_nodes)
+    return reduce(DataFrame.unionByName, levels).select(
         "node",
         F.array_join(F.transform(F.col("nodes"), lambda x: x.cast("string")), "->").alias("path"),
         F.size("nodes").cast("int").alias("length"),
@@ -293,19 +290,11 @@ def pagerank_fixed(
     (pickaxe.py:898-1021); PageRank extends the same edge-table model with
     the canonical iterative-centrality workload.
 
-    No `converged` flag, deliberately (r14 verdict #6 asked each fixed-
-    round operator to emit one or say why not): the peel family
-    (k_core/k_truss/LPA) reaches an EXACT fixpoint a set-equality check
-    can certify, but power iteration converges only asymptotically —
-    consecutive iterates are (essentially) never bit-equal, so the
-    k_truss-style flag would read false forever, and any tolerance-based
-    variant smuggles in a float epsilon this integer formulation exists
-    to avoid. Callers bound the error a priori instead: the iterate
-    satisfies ‖r_t − r*‖₁ ≤ d^t·‖r_0 − r*‖₁ (d = damping_pct/100), a
-    deterministic geometric bound — pick iters from the tolerance, e.g.
-    d=0.85 gives <1e-3 of residual mass at iters≈43, and the ranking
-    ORDER stabilizes far earlier (the python-twin pytest pins the full
-    iters=5 ordering on its hand-built graph).
+    No `converged` flag and no `iterate`: power iteration converges only
+    asymptotically, so consecutive iterates are essentially never equal,
+    and the build must run no job. Pick `iters` from the geometric bound
+    ‖r_t − r*‖₁ ≤ d^t·‖r_0 − r*‖₁ (d = damping_pct/100; d=0.85 leaves
+    <1e-3 of residual mass at iters≈43).
     """
     if iters < 1:
         raise ValueError(f"iters must be >= 1, got {iters}")
@@ -682,25 +671,21 @@ def k_core(
     `k=None` derives k as the LOWER-MEDIAN initial degree via a scalar
     subquery (degree-histogram cum·2 >= total — the hist_quantiles
     integer rule, no float, no collect), making the query meaningful at
-    any scale factor without a hand-tuned constant. Fixed `iters` rounds
-    keep the plan deterministic and SQL-replayable (the pagerank recipe);
-    a pytest pins convergence (round iters == iters+1) on the bench graph.
-    Every output row carries `converged` — true iff the LAST peel round
-    removed zero edges, i.e. the result is the true k-core fixpoint; with
+    any scale factor without a hand-tuned constant. The peel runs on
+    `iterate`, at most `iters` rounds, and stops at the first round that
+    removes no edge. Every output row carries `converged` — true iff such
+    a round came, i.e. the result is the true k-core fixpoint; with
     insufficient `iters` under-peeled nodes can remain, and callers
-    branching on core membership should gate on the flag (the k_truss
-    contract, r14 verdict #6). The flag costs two counts, both over
-    eagerly-checkpointed rounds when iters >= 2 (one symmetrized-edge
-    derivation pass when iters == 1).
+    branching on core membership should gate on the flag.
 
     Scale: each round is one degree aggregate + two node semi-joins over
     the shrinking edge set — O(edges) per round. The keep-list is
     O(nodes), so by default (`broadcast_keep=False`) the semi-joins carry
     NO broadcast hint: Catalyst/AQE picks broadcast at runtime when the
-    surviving node set is actually small (each round executes eagerly via
-    localCheckpoint, so AQE sees real sizes), and falls back to
-    shuffle/sort-merge when it is not — at 100 TB bucket the edge table
-    on src/dst and the semi-joins sort-merge co-located as documented.
+    surviving node set is actually small (each round is checkpointed, so
+    AQE sees real sizes), and falls back to shuffle/sort-merge when it is
+    not — at 100 TB bucket the edge table on src/dst and the semi-joins
+    sort-merge co-located as documented.
     `broadcast_keep=True` pins the hint for callers who KNOW the core is
     tiny (a hint-pinned O(nodes) build side would otherwise OOM the
     driver on a billion-node graph long before any fallback). Input edges
@@ -719,12 +704,15 @@ def k_core(
         )
         .where(F.col("src") != F.col("dst"))
         .distinct()
+        .localCheckpoint(eager=True)
     )
-    deg0 = sym.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
     if k is None:
+        deg0 = sym.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
         hist = deg0.groupBy("d").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
         wcum = Window.orderBy("d").rowsBetween(Window.unboundedPreceding, Window.currentRow)
         wtot = Window.partitionBy()
+        # read every round: checkpoint once, or each round replays the
+        # degree histogram
         kdf = (
             hist.select(
                 "d",
@@ -733,43 +721,36 @@ def k_core(
             )
             .where(F.col("cum") * 2 >= F.col("tot"))
             .agg(F.min("d").alias("k"))
+            .localCheckpoint(eager=True)
         )
     else:
         # literal threshold: a 1-row range, never a pass over the graph
         kdf = edges.sparkSession.range(1).select(
             F.lit(int(k)).cast("bigint").alias("k")
         )
-    # kdf is consumed every round: checkpoint it once (derived path only —
-    # it replays the degree-histogram branch otherwise). Each round's
-    # filtered edge set is eagerly localCheckpointed (the
-    # connected_components pattern): e feeds its OWN next-round keep-list
-    # twice plus the degree rebuild, so a lazy chain multiplies the logical
-    # plan per round (the round-9 plan-growth explosion — an uncheckpointed
-    # 6-round build did not finish analysis at sf0.001).
-    if k is None:
-        kdf = kdf.localCheckpoint(eager=True)
-    e = sym
-    deg = deg0
-    n_in = 0
-    for i in range(iters):
-        if i == iters - 1:
-            # only the LAST round's before/after edge counts decide
-            # `converged` (the k_truss recipe); for iters >= 2 this reads
-            # the prior round's checkpoint, for iters == 1 it pays one
-            # derivation pass over the symmetrized edge set
-            n_in = e.count()
+
+    def step(history):
+        e = history[-1]
+        deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("d"))
         keep = (
             deg.crossJoin(F.broadcast(kdf))
             .where(F.col("d") >= F.col("k"))
             .select(F.col("src").alias("node"))
         )
-        e = _peel_round(e, keep, broadcast_keep).localCheckpoint(eager=True)
-        deg = e.groupBy("src").agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    n_out = e.count()
-    return deg.select(
-        F.col("src").alias("node"),
-        F.col("d").alias("core_degree"),
-        F.lit(n_out == n_in).alias("converged"),
+        return _peel_round(e, keep, broadcast_keep)
+
+    history, converged = iterate(
+        sym, step, max_rounds=iters,
+        done=lambda prev, new: prev.join(new, ["src", "dst"], "left_anti").isEmpty(),
+    )
+    return (
+        history[-1].groupBy("src")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
+        .select(
+            F.col("src").alias("node"),
+            F.col("d").alias("core_degree"),
+            F.lit(converged).alias("converged"),
+        )
     )
 
 
@@ -781,12 +762,12 @@ def label_propagation(
     broadcast_labels: bool = False,
 ) -> DataFrame:
     """Community detection by synchronous label propagation (LPA,
-    Raghavan et al. 2007), fixed `iters` rounds: every node starts as its
-    own label; each round it adopts the most frequent label among its
-    neighbors PLUS its own current label (the self-vote damps the
-    bipartite oscillation synchronous LPA is known for), ties broken by
-    the smallest label — a total order, so the result is deterministic
-    and SQL-replayable round by round.
+    Raghavan et al. 2007): every node starts as its own label; each round
+    it adopts the most frequent label among its neighbors PLUS its own
+    current label (the self-vote damps the bipartite oscillation
+    synchronous LPA is known for), ties broken by the smallest label — a
+    total order, so the result is deterministic and SQL-replayable round
+    by round.
 
     Distinct from connected_components (min-label to FIXPOINT, one label
     per component): LPA splits a connected graph into densely-linked
@@ -794,24 +775,21 @@ def label_propagation(
     giant near-dup component; on the co-purchase graph, product
     neighborhoods rather than the whole connected market.
 
-    Fixed rounds, not convergence, on purpose (the pagerank_fixed / k_core
-    recipe): synchronous LPA has no convergence guarantee, and a fixed
-    round count keeps the oracle an iterative CTE replay. Returns (node,
-    label, converged) for every node in the symmetrized edge set —
-    `converged` true iff the LAST round changed zero labels (a fixpoint
-    of the synchronous update; oscillating configurations report false
-    forever, which is exactly the signal callers need before trusting
-    community assignments — the k_truss contract, r14 verdict #6). The
-    flag costs one node-keyed equi-join + count over the two final
-    checkpointed label states.
+    At most `iters` rounds on `iterate`, stopping at the first round that
+    changes no label: synchronous LPA has no convergence guarantee, and a
+    round cap keeps the oracle an iterative CTE replay (the update is
+    deterministic, so a fixpoint stays fixed and stopping early returns
+    the same rows). Returns (node, label, converged) for every node in
+    the symmetrized edge set — `converged` true iff a round changed zero
+    labels (oscillating configurations report false, which is exactly
+    the signal callers need before trusting community assignments).
 
     Scale: each round is one edge⋈labels equi-join (labels shuffle; the
     edge table's partitioning is reusable across rounds), one (node,
     label) count, and a per-node max_by argmax — every aggregate keeps a
-    map-side partial, no per-node sort anywhere. Per-round
-    localCheckpoint truncates the logical plan (the round-9 plan-growth
-    explosion; k_core's note). State per node is one label — O(nodes)
-    total, never collected (unless `broadcast_labels` opts in, below).
+    map-side partial, no per-node sort anywhere. State per node is one
+    label — O(nodes) total, never collected (unless `broadcast_labels`
+    opts in, below).
 
     `broadcast_labels` pins a broadcast hint on the label state entering
     each round's edge join: the checkpointed label RDD carries no size
@@ -841,22 +819,11 @@ def label_propagation(
         .withColumn("label", F.col("node"))
         .localCheckpoint(eager=True)
     )
-    prev = labels
-    for _ in range(iters):
-        prev = labels
-        labels = _lpa_round(sym, labels, broadcast_labels).localCheckpoint(
-            eager=True
-        )
-    # converged iff the LAST round changed zero labels: one equi-join +
-    # count over the two final checkpointed O(nodes) label states (the
-    # k_truss/k_core last-round-only recipe, r14 verdict #6)
-    n_changed = (
-        labels.alias("n")
-        .join(prev.alias("p"), "node")
-        .where(F.col("n.label") != F.col("p.label"))
-        .count()
+    history, converged = iterate(
+        labels, lambda h: _lpa_round(sym, h[-1], broadcast_labels), max_rounds=iters,
+        done=lambda prev, new: prev.join(new, ["node", "label"], "left_anti").isEmpty(),
     )
-    return labels.withColumn("converged", F.lit(n_changed == 0))
+    return history[-1].withColumn("converged", F.lit(converged))
 
 
 def _lpa_round(
@@ -910,27 +877,20 @@ def k_truss(
     Returns the surviving canonical edges (a, b, support, converged) with
     `support` the triangle count within the returned edge set (recomputed
     after the final peel, so the column is consistent with what survived —
-    matching k_core's post-peel degree contract) and `converged` true iff
-    the LAST peel round removed zero edges, i.e. the result is a fixpoint.
-    The support >= k−2 truss invariant is guaranteed only when
-    `converged` is true: with insufficient `iters` the final recompute
-    can report supports below k−2 (down to 0) for edges a further round
-    would have peeled — callers branching on truss membership should gate
-    on the flag rather than assume fixpoint (r13 advice). Fixed `iters`
-    rounds keep the plan deterministic and SQL-replayable (the
-    k_core/pagerank recipe); convergence on the bench graph is pinned in
-    pytest. The flag costs exactly two counts, both over eagerly-
-    checkpointed edge sets: the LAST round's input (the base checkpoint
-    when iters == 1, else round iters−1's post-peel checkpoint) and its
-    output — earlier rounds never count (r14 advice: the previous shape
-    counted every round plus the base, 1 + iters counts total).
+    matching k_core's post-peel degree contract). The peel runs on
+    `iterate`, at most `iters` rounds, and stops at the first round that
+    removes no edge; `converged` is true iff such a round came, i.e. the
+    result is a fixpoint. The support >= k−2 truss invariant is
+    guaranteed only when `converged` is true: with insufficient `iters`
+    the final recompute can report supports below k−2 (down to 0) for
+    edges a further round would have peeled — callers branching on truss
+    membership should gate on the flag rather than assume fixpoint.
 
     Scale: each round is ONE id-oriented wedge self-join (each triangle
     generated exactly once, the triangle_count recipe) + a 3-edge explode
     + one edge-keyed count + the filter join — O(wedges) per round over a
-    SHRINKING edge set, with per-round localCheckpoint so the logical
-    plan stays flat and AQE sees real sizes (the k_core doctrine). All id
-    comparisons are least/greatest/'<' — string node ids work.
+    SHRINKING edge set. All id comparisons are least/greatest/'<' —
+    string node ids work.
     """
     if k < 3:
         raise ValueError(f"k must be >= 3, got {k}")
@@ -969,23 +929,22 @@ def k_truss(
             .agg(F.count(F.lit(1)).cast("bigint").alias("support"))
         )
 
-    n_in = 0
-    for i in range(iters):
-        if i == iters - 1:
-            # only the LAST round's before/after sizes decide `converged`;
-            # e here is always an eager checkpoint (base or prior round)
-            n_in = e.count()
-        sup = support(e)
-        e = (
-            e.join(sup, ["a", "b"], "left")
+    def step(history):
+        e = history[-1]
+        return (
+            e.join(support(e), ["a", "b"], "left")
             .where(F.coalesce(F.col("support"), F.lit(0)) >= thr)
             .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-    n_out = e.count()
+
+    history, converged = iterate(
+        e, step, max_rounds=iters,
+        done=lambda prev, new: prev.join(new, ["a", "b"], "left_anti").isEmpty(),
+    )
+    e = history[-1]
     return e.join(support(e), ["a", "b"], "left").select(
         "a",
         "b",
         F.coalesce(F.col("support"), F.lit(0).cast("bigint")).alias("support"),
-        F.lit(n_out == n_in).alias("converged"),
+        F.lit(converged).alias("converged"),
     )

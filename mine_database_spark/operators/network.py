@@ -10,10 +10,14 @@ assign_ids (pickaxe.py:1046-1102), PathwaySearch.bfs
 
 from __future__ import annotations
 
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from mine_database_spark.operators.expansion import edge_table
+from mine_database_spark.operators.graph import _path_levels
+from mine_database_spark.operators.iterate import iterate
 
 
 def reverse_edges(reactions: DataFrame) -> DataFrame:
@@ -28,31 +32,33 @@ def reverse_edges(reactions: DataFrame) -> DataFrame:
     return prods.join(reacts, "rxn_id").select("src", "dst", "rxn_id")
 
 
-def find_minimal_set(reactions: DataFrame, whitelist: DataFrame, max_iter: int = 50):
+def find_minimal_set(reactions: DataFrame, whitelist: DataFrame):
     """Compounds + reactions reachable backwards from whitelist ids.
 
-    Returns (compound_ids DF['_id'], reaction_ids DF['rxn_id']).
-    Iterative frontier joins with localCheckpoint; terminates at fixpoint
-    (depth bounded by generation count).
+    Returns (compound_ids DF['_id'], reaction_ids DF['rxn_id']). Each round
+    joins the frontier to the reverse edges on `iterate`; the frontier holds
+    only never-visited compounds, so the walk ends (no round cap) at the
+    first empty frontier, at most one round per compound.
     """
     redges = reverse_edges(reactions).localCheckpoint(eager=True)
-    visited = whitelist.select(F.col(whitelist.columns[0]).alias("_id")).distinct()
-    frontier = visited
-    rxns = visited.sparkSession.createDataFrame([], "rxn_id string")
-    for it in range(max_iter):
-        step = redges.join(
-            F.broadcast(frontier).withColumnRenamed("_id", "src"), "src"
+    first = (
+        whitelist.select(F.col(whitelist.columns[0]).alias("_id")).distinct(),
+        reactions.sparkSession.createDataFrame([], "rxn_id string"),
+    )
+
+    def visited(history):
+        return reduce(DataFrame.unionByName, [frontier for frontier, _ in history])
+
+    def step(history):
+        frontier, rxns = history[-1]
+        hop = redges.join(F.broadcast(frontier).withColumnRenamed("_id", "src"), "src")
+        return (
+            hop.select(F.col("dst").alias("_id")).distinct().join(visited(history), "_id", "left_anti"),
+            rxns.unionByName(hop.select("rxn_id").distinct().join(rxns, "rxn_id", "left_anti")),
         )
-        new_rxns = step.select("rxn_id").distinct().join(rxns, "rxn_id", "left_anti")
-        nxt = (
-            step.select(F.col("dst").alias("_id")).distinct().join(visited, "_id", "left_anti")
-        ).localCheckpoint(eager=True)
-        rxns = rxns.unionByName(new_rxns).localCheckpoint(eager=True)
-        if nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-    return visited, rxns
+
+    history, _ = iterate(first, step, max_rounds=None, done=lambda prev, new: new[0].isEmpty())
+    return visited(history), history[-1][1]
 
 
 def prune_network(compounds: DataFrame, reactions: DataFrame, whitelist: DataFrame):
@@ -132,7 +138,9 @@ def pathway_bfs(
     gibbs_cap: float | None = None,
 ) -> DataFrame:
     """G5: start→end pathway enumeration carrying path arrays; depth-capped
-    iterative joins (Scripts/pathway_search.py:59-144).
+    iterative joins (Scripts/pathway_search.py:59-144) on the walk
+    `graph.enumerate_paths` runs (`graph._path_levels`). Returns (node,
+    path, length) for every path of 1..max_depth hops ending in `end_ids`.
 
     Constrained search (pathway_search.py:32-57): with `np_scores`
     (id, NP_likeness) and `np_min`, compounds scoring <= np_min are excluded
@@ -147,6 +155,8 @@ def pathway_bfs(
     compound untested and __load_queue skips all checks on the first hop —
     asymmetries its BFS does not share).
     """
+    if max_depth < 1:
+        raise ValueError("max_depth must be >= 1")
     spark = reactions.sparkSession
     fedges = reverse_edges(reactions).select(
         F.col("dst").alias("src"), F.col("src").alias("dst"), "rxn_id"
@@ -157,29 +167,13 @@ def pathway_bfs(
             F.col(idc).alias("rxn_id")
         )
         fedges = fedges.join(bad_r, "rxn_id", "left_anti")
+    bad_c = None
     if np_scores is not None and np_min is not None:
         idc, vc = np_scores.columns[0], np_scores.columns[1]
-        bad_c = np_scores.where(F.col(vc).isNotNull() & (F.col(vc) <= np_min)).select(
-            F.col(idc).alias("__bad")
-        )
-        fedges = fedges.join(bad_c.withColumnRenamed("__bad", "src"), "src", "left_anti")
-        fedges = fedges.join(bad_c.withColumnRenamed("__bad", "dst"), "dst", "left_anti")
-    paths = spark.createDataFrame([(s, [s]) for s in start_ids], "node string, path array<string>")
-    results = []
-    for _ in range(max_depth):
-        stepped = (
-            fedges.join(paths.withColumnRenamed("node", "src"), "src")
-            .where(~F.array_contains(F.col("path"), F.col("dst")))
-            .select(F.col("dst").alias("node"), F.concat(F.col("path"), F.array(F.col("dst"))).alias("path"))
-            .dropDuplicates(["node", "path"])
-            .localCheckpoint(eager=True)
-        )
-        hits = stepped.where(F.col("node").isin(end_ids))
-        results.append(hits)
-        paths = stepped
-        if paths.isEmpty():
-            break
-    out = results[0]
-    for r in results[1:]:
-        out = out.unionByName(r)
-    return out.select("node", "path", F.size("path").alias("length")).orderBy("length", "node")
+        bad_c = np_scores.where(F.col(vc).isNotNull() & (F.col(vc) <= np_min)).select(idc)
+    starts = spark.createDataFrame([(s, [s]) for s in start_ids], "node string, nodes array<string>")
+    levels = _path_levels(fedges, starts, max_depth, bad_c)
+    out = reduce(DataFrame.unionByName, levels[1:]).where(F.col("node").isin(end_ids))
+    return out.select("node", F.col("nodes").alias("path"), F.size("nodes").alias("length")).orderBy(
+        "length", "node"
+    )

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from mine_database_spark.functions.lits import double_array_lit
 
 from mine_database_spark.functions.vectors import cosine, cosine_maybe_unrolled
+from mine_database_spark.operators.iterate import iterate
 from mine_database_spark.operators.pairs import guard_pair_volume, key_pairs, postings
 
 
@@ -85,9 +86,8 @@ def kmeans_codebook(
     Scale: each iteration is one broadcast argmax projection over the
     (optionally sampled) corpus plus two map-side-combinable aggregations
     whose cardinality is n_centroids x dim — codebook training at 100 TB
-    runs on a sample (`sample_fraction`), never the full corpus. The tiny
-    one-row codebook is eagerly localCheckpointed per iteration so the
-    lineage doesn't deepen with n_iter. Empty lists drop out (standard
+    runs on a sample (`sample_fraction`), never the full corpus. The
+    `n_iter` rounds run on `iterate`. Empty lists drop out (standard
     Lloyd degeneracy; fewer lists only reduces probe pruning, never
     correctness).
     """
@@ -99,32 +99,33 @@ def kmeans_codebook(
         .limit(n_centroids)
         .agg(F.collect_list(F.struct(F.col("vec_id").alias("cid"), F.col("v").alias("cv"))).alias("__cents"))
     )
-    for _ in range(n_iter):
-        best = F.reverse(
-            F.array_sort(
-                F.transform(
-                    F.col("__cents"),
-                    lambda ct: F.struct(
-                        F.aggregate(
-                            F.zip_with(F.col("v"), ct["cv"], lambda a, b: a * b),
-                            F.lit(0.0),
-                            lambda acc, x: acc + x,
-                        ).alias("s"),
-                        ct["cid"].alias("cid"),
-                    ),
-                )
+    best = F.reverse(
+        F.array_sort(
+            F.transform(
+                F.col("__cents"),
+                lambda ct: F.struct(
+                    F.aggregate(
+                        F.zip_with(F.col("v"), ct["cv"], lambda a, b: a * b),
+                        F.lit(0.0),
+                        lambda acc, x: acc + x,
+                    ).alias("s"),
+                    ct["cid"].alias("cid"),
+                ),
             )
-        )[0]["cid"]
-        assigned = c.crossJoin(F.broadcast(cent_row)).select(F.col("v"), best.alias("cid"))
+        )
+    )[0]["cid"]
+
+    def step(history):
+        assigned = c.crossJoin(F.broadcast(history[-1])).select(F.col("v"), best.alias("cid"))
         dims = assigned.select("cid", F.posexplode("v").alias("pos", "x"))
         means = dims.groupBy("cid", "pos").agg(F.avg("x").alias("m"))
         vecs = means.groupBy("cid").agg(
             F.transform(F.array_sort(F.collect_list(F.struct("pos", "m"))), lambda s: s["m"]).alias("cv")
         )
-        cent_row = vecs.agg(
-            F.collect_list(F.struct(F.col("cid"), F.col("cv"))).alias("__cents")
-        ).localCheckpoint(eager=True)
-    return cent_row
+        return vecs.agg(F.collect_list(F.struct(F.col("cid"), F.col("cv"))).alias("__cents"))
+
+    # fixed rounds, no done(): float means are not bit-stable across rounds
+    return iterate(cent_row, step, max_rounds=n_iter)[0][-1]
 
 
 def _ranked_lists(col):
@@ -1592,7 +1593,7 @@ def pq_codebook_trained(
     combinable aggregations of at most m·ks·(dim/m) rows each round.
 
     Scale: train on a sample (`sample_fraction`) exactly like
-    kmeans_codebook; the corpus-wide passes are the encode/serve steps,
+    kmeans_codebook, `n_iter` rounds on `iterate`; the corpus-wide passes are the encode/serve steps,
     not training. Empty clusters drop (fewer centroids in that subspace
     only degrades compression granularity, never correctness — codes are
     positions in the per-subspace centroid list)."""
@@ -1615,17 +1616,18 @@ def pq_codebook_trained(
     )
     cb = pq_codebook(c.select("vec_id", F.col("v").alias(vec_col)), m, ks, dim,
                      vec_col=vec_col, normalize=False)
-    for _ in range(n_iter):
-        # subspace id is a row value here (column `sub`), so only the inner
-        # squared-L2 fold unrolls; same IEEE order as the zip_with fold
-        dist = " + ".join(
-            f"(sv[{j}] - ct.cv[{j}]) * (sv[{j}] - ct.cv[{j}])" for j in range(sub)
-        )
-        code = F.expr(
-            f"array_sort(transform(__pq[sub].cents, (ct, i) -> "
-            f"struct(({dist}) AS d, i AS pos)))[0].pos"
-        )
-        assigned = rows.crossJoin(F.broadcast(cb)).select("sub", "sv", code.alias("code"))
+    # subspace id is a row value here (column `sub`), so only the inner
+    # squared-L2 fold unrolls; same IEEE order as the zip_with fold
+    dist = " + ".join(
+        f"(sv[{j}] - ct.cv[{j}]) * (sv[{j}] - ct.cv[{j}])" for j in range(sub)
+    )
+    code = F.expr(
+        f"array_sort(transform(__pq[sub].cents, (ct, i) -> "
+        f"struct(({dist}) AS d, i AS pos)))[0].pos"
+    )
+
+    def step(history):
+        assigned = rows.crossJoin(F.broadcast(history[-1])).select("sub", "sv", code.alias("code"))
         dims = assigned.select("sub", "code", F.posexplode("sv").alias("pos", "x"))
         means = dims.groupBy("sub", "code", "pos").agg(F.avg("x").alias("mu"))
         cents = means.groupBy("sub", "code").agg(
@@ -1636,10 +1638,10 @@ def pq_codebook_trained(
         subs = cents.groupBy("sub").agg(
             F.array_sort(F.collect_list(F.struct(F.col("code").alias("cid"), "cv"))).alias("cents")
         )
-        cb = subs.agg(
-            F.array_sort(F.collect_list(F.struct("sub", "cents"))).alias("__pq")
-        ).localCheckpoint(eager=True)
-    return cb
+        return subs.agg(F.array_sort(F.collect_list(F.struct("sub", "cents"))).alias("__pq"))
+
+    # fixed rounds, no done(): float means are not bit-stable across rounds
+    return iterate(cb, step, max_rounds=n_iter)[0][-1]
 
 
 def pq_topk_rescored(

@@ -5506,11 +5506,11 @@ def _copurchase_pair_weights(l: DataFrame) -> DataFrame:
 
 def q_k_core(spark: SparkSession, sf_dir: str) -> DataFrame:
     """2-core of the REPEAT co-purchase graph (pairs sharing >= 2 orders,
-    graph.k_core, 6 peel rounds): dropping the tree-like periphery —
+    graph.k_core, at most 6 peel rounds): dropping the tree-like periphery —
     nodes that no cycle passes through — is the standard cleanup before
     community detection, and on a dedup-pair graph the 2-core is exactly
     the multi-way template families (pendant one-off pairs peel away).
-    All arithmetic is integer; the peel is 6 fixed rounds (converged on
+    All arithmetic is integer; the peel stops within 6 rounds (converged on
     this graph at every sf, pinned in pytest)."""
     (l,) = _t(spark, sf_dir, "lineitem")
     pairs = _copurchase_pair_weights(l)
@@ -5545,7 +5545,7 @@ def _kcore_sql(iters: int = 6, k: int = 2, min_w: int = 2) -> str:
         )
     parts[-1] = parts[-1].rstrip(",")
     # converged mirrors the operator's fixpoint flag: the last peel round
-    # removed zero edges (|e{iters-1}| = |e{iters}|) — the k_truss recipe
+    # removed zero edges (|e{iters-1}| = |e{iters}|)
     parts.append(
         f"SELECT src AS node, CAST(COUNT(*) AS BIGINT) AS core_degree,"
         f" (SELECT COUNT(*) FROM e{iters-1}) = (SELECT COUNT(*) FROM e{iters})"
@@ -5567,7 +5567,7 @@ def q_k_truss(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the 4-truss of this graph is empty at sf0.01 — repeat co-purchase
     triangles rarely interlock 2-deep); the multi-round CASCADE the
     operator exists for is pinned by the planted triangle-strip pytest.
-    Integer supports, fixed rounds, per-round checkpoints; convergence on
+    Integer supports, at most 2 rounds on `iterate`; convergence on
     this graph is pinned in pytest."""
     (l,) = _t(spark, sf_dir, "lineitem")
     pairs = _copurchase_pair_weights(l)
@@ -5849,8 +5849,8 @@ FROM t
 
 
 def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Community labels over the co-purchase graph by 4 rounds of
-    synchronous LPA with self-vote (graph.label_propagation) — splits the
+    """Community labels over the co-purchase graph by up to 4 rounds
+    of synchronous LPA with self-vote (graph.label_propagation) — splits the
     connected market into product neighborhoods; ties resolve to the
     smallest label so the replay is exact."""
     (l,) = _t(spark, sf_dir, "lineitem")
@@ -5991,14 +5991,9 @@ FROM orders"""
 # one manual input: every query whose call graph reaches code changed in
 # this round.
 GATE_TOUCHED: tuple[str, ...] = (
-    # pair generation moved to operators/pairs.py (postings + key_pairs)
-    "pagerank", "label_propagation", "triangle_count", "triangle_count_deg",
-    "adamic_adar", "degree_distribution", "k_core", "k_truss",
-    "ngram_jaccard", "ngram_jaccard_capped", "text_knn", "minhash_estimate",
-    "minhash_lsh", "dup_clusters", "keep_best_dedup", "binary_neardup",
-    "embed_neardup_lsh", "knn_graph_lsh", "lsh_candidate_fraction",
-    "ivf_candidate_fraction", "winnow_pairs", "ngram_containment",
-    "simhash_hamming", "source_overlap", "semantic_dedup", "token_pmi",
+    # round loops moved to operators/iterate.py (scripts/gate_touched.py)
+    "dup_clusters", "k_core", "label_propagation", "pagerank", "k_truss",
+    "keep_best_dedup", "copurchase_reach",
 )
 
 _DECLARED: dict[str, Callable[[SparkSession, str], DataFrame]] = {

@@ -285,6 +285,36 @@ def test_pathway_bfs_constrained_guards(spark):
     assert paths(np_scores=np_scores, np_min=0.5, energies=energies, gibbs_cap=5.0) == set()
     # an excluded END compound kills all paths to it
     assert paths(np_scores=np_scores, np_min=2.0) == set()
+    with pytest.raises(ValueError, match="max_depth must be >= 1"):
+        pathway_bfs(rxns, ["A"], ["C"], max_depth=0)
+
+
+def test_deep_chain_orphan_gc_and_prune_run_to_fixpoint(spark):
+    """A 14-deep chain C0 -R1-> C1 -R2-> ... -R14-> C14: with R1 deleted
+    every compound past C0 is orphaned one round after the previous one,
+    and the whole chain must go; with R1 kept, pruning to the tail must
+    keep the whole chain. Both loops run to fixpoint with no round cap."""
+    from mine_database_spark.operators.filters import orphan_gc
+    from mine_database_spark.operators.network import prune_network
+    from mine_database_spark.schemas import COMPOUND_SCHEMA, REACTION_SCHEMA
+
+    depth = 14
+    cpd = lambda i, t: (f"C{i}", f"C{i}", None, None, t, i, None, None, True, None)
+    compounds = spark.createDataFrame(
+        [cpd(0, "Starting Compound")] + [cpd(i, "Predicted") for i in range(1, depth + 1)],
+        COMPOUND_SCHEMA,
+    )
+    rxn = lambda i: (f"R{i}", [(1, f"C{i - 1}")], [(1, f"C{i}")], ["op"], None)
+    reactions = spark.createDataFrame([rxn(i) for i in range(1, depth + 1)], REACTION_SCHEMA)
+
+    c_gc, r_gc = orphan_gc(compounds, reactions.where("_id != 'R1'"))
+    assert [r["_id"] for r in c_gc.collect()] == ["C0"]
+    assert r_gc.count() == 0
+
+    tail = spark.createDataFrame([(f"C{depth}",)], "_id string")
+    c_keep, r_keep = prune_network(compounds, reactions, tail)
+    assert {r["_id"] for r in c_keep.collect()} == {f"C{i}" for i in range(depth + 1)}
+    assert {r["_id"] for r in r_keep.collect()} == {f"R{i}" for i in range(1, depth + 1)}
 
 
 def test_enumerate_paths_excluded_nodes(spark):

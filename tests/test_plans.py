@@ -242,6 +242,32 @@ def test_registry_builds_are_action_free(spark, sf_smoke):
     assert not offenders, offenders
 
 
+def test_round_loops_checkpoint_only_through_iterate():
+    """operators/iterate.py is the one place a loop checkpoints a round:
+    no `localCheckpoint` call may sit inside a for/while loop anywhere
+    else in the package."""
+    import ast
+    from pathlib import Path
+
+    import mine_database_spark
+
+    root = Path(mine_database_spark.__file__).parent
+    offenders = set()
+    for path in sorted(root.rglob("*.py")):
+        if path == root / "operators" / "iterate.py":
+            continue
+        for loop in ast.walk(ast.parse(path.read_text())):
+            if isinstance(loop, (ast.For, ast.AsyncFor, ast.While)):
+                offenders |= {
+                    f"{path.relative_to(root)}:{node.lineno}"
+                    for node in ast.walk(loop)
+                    if isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr == "localCheckpoint"
+                }
+    assert not offenders, sorted(offenders)
+
+
 def test_doc_chunks_zero_shuffle_no_python(spark, sf_smoke):
     """Chunking is per-document: scan -> project -> generate, with no
     Exchange and no Python evaluation — it must run at parquet scan speed."""
